@@ -147,11 +147,11 @@ _PRIORITY = (
 
 
 def _hygienic(fn: Callable[[SparkSession, str], DataFrame]):
-    """Release the PREVIOUS query's tracked caches when a DIFFERENT
-    query enters (see cache.py): live cached storage stays bounded by
-    one query's working set across any sweep, each query's own persists
-    survive through its collect, and re-running the same query stays
-    cache-warm."""
+    """Release every tracked cache on each query entry, the same query
+    re-entering included (see cache.begin_query): live cached storage
+    stays bounded by one query's working set across any sweep, each
+    query's own persists survive through its collect, and a re-run
+    recomputes from its inputs instead of reading a warm cache."""
     import functools
 
     from .cache import begin_query

@@ -1,56 +1,58 @@
 """K1: idempotent upsert sink — REPLACE-INTO-keyed-on-(kit, datum)
 semantics (lib/MyARCHIVE.py:360-456) as a latest-row-wins merge.
 
-Two implementations behind one contract (no Delta in this runtime):
+One archive layout, one commit protocol (no Delta in this runtime):
 
-- `upsert_parquet` — flat layout: read existing, union, window-dedup on
-  the key, crash-safe directory swap. Rewrites the WHOLE dataset per
-  merge — correct, but O(archive) I/O, so it is the small-archive /
-  test-runtime path only.
-- `upsert_parquet_partitioned` — the scale path: archive hive-laid-out
-  as `day=YYYY-MM-DD/`; a micro-batch merge reads ONLY the partitions
-  whose days appear in the batch (partition pruning does the work),
-  dedups, and writes back with dynamic partitionOverwriteMode so
-  untouched days are never read, never rewritten, and stay
-  byte-identical on disk. Per-micro-batch I/O is O(touched days), not
-  O(archive) — the REPLACE-INTO cost model of the reference's
-  per-day-indexed MySQL archive, on plain parquet.
-
-Crash safety: the flat path swaps via rename with an `__old_` stash and
-restores/cleans orphans on entry; the partitioned path stages the fully
-merged touched-day data in a `__stage` sibling BEFORE the dynamic
-overwrite mutates the archive, and on entry re-commits a completed
-orphaned stage (the stage is a superset of the touched days at crash
-time, so recovery is automatic and lossless; re-commit is idempotent).
-Streaming checkpoint replay provides the outer at-least-once retry.
+- Layout: hive day partitions `day=YYYY-MM-DD/` (null timestamps land
+  on the NULL_DAY sentinel). A micro-batch merge reads ONLY the days
+  the batch touches — and within each day only the files whose key
+  range the batch can collide with — so untouched days and files are
+  never read, never rewritten, and stay byte-identical on disk.
+  Per-micro-batch I/O is O(touched files), not O(archive) — the
+  REPLACE-INTO cost model of the reference's per-day-indexed MySQL
+  archive, on plain parquet.
+- Commit: every archive write that replaces files — the merge
+  (`upsert_parquet_partitioned`), the compactor (`compact_days`) and
+  the one-shot flat-archive migration (`migrate_to_partitioned`) —
+  goes manifest -> stage -> promote: the manifest listing the files to
+  replace is written durably first, the merged data is staged in a
+  `__stage` sibling, then the promote moves the staged files in and
+  deletes the replaced ones. Every entry finishes or discards an
+  interrupted commit first (`_recover_file_merge`), so a crash at any
+  point is completed by the next entry; streaming checkpoint replay
+  provides the outer at-least-once retry. Blind appends
+  (`append_day_partitioned`) add files and replace none.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import time
-import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 DAY_COL = "day"
-# null timestamps get a fixed sentinel day so the touched-day filter and
-# dynamic overwrite treat them like any other partition (a NULL day would
-# silently fall outside the isin() pruning filter and the merge would
-# drop the existing rows of the hive default partition)
+# null timestamps get a fixed sentinel day so the touched-day filter
+# treats them like any other partition (a NULL day would silently fall
+# outside the isin() pruning filter, and a hive write would put the rows
+# in __HIVE_DEFAULT_PARTITION__, where no merge ever finds them again)
 NULL_DAY = "0000-00-00"
+
+
+def _day(ts_col: str) -> Column:
+    """The archive's day-partition value of `ts_col` — the one
+    derivation every writer uses, so a row's day never depends on which
+    writer laid it down."""
+    return F.coalesce(F.date_format(F.col(ts_col), "yyyy-MM-dd"), F.lit(NULL_DAY))
 
 
 def _layout(path: str) -> str | None:
     """Detect the archive layout on disk: 'partitioned' (day= dirs),
-    'flat' (top-level parquet files), or None (absent/empty). Both
-    upsert variants check this at entry — pointing the flat merge at a
-    hive layout would silently rewrite it flat (destroying the
-    partitioning and flipping the day column's type), and pointing the
-    partitioned merge at a flat archive would crash on the missing day
-    column; a loud error beats either."""
+    'flat' (top-level parquet files), or None (absent/empty). The sinks
+    check this at entry: a flat archive (laid down by an older
+    deployment or by hand) would crash the merge on the missing day
+    column, and a loud error naming the migration beats that."""
     if not os.path.exists(path):
         return None
     names = os.listdir(path)
@@ -59,98 +61,6 @@ def _layout(path: str) -> str | None:
     if any(f.endswith(".parquet") for f in names):
         return "flat"
     return None
-
-
-def _stash_name(path: str) -> str:
-    """`__old_` stash with a zero-padded epoch-ns field: the monotonic
-    creation order is encoded in the NAME, so _restore_orphans can pick
-    the latest stash without trusting directory mtimes (which tie within
-    filesystem granularity and make 'latest' arbitrary)."""
-    return f"{path}__old_{time.time_ns():020d}_{uuid.uuid4().hex[:8]}"
-
-
-def _restore_orphans(path: str) -> None:
-    """Automatic restart recovery for the flat swap: a crash between the
-    two renames leaves the archive path absent with all data stranded in
-    a `__old_<hex>` sibling (and possibly a half-promoted `__tmp_`). On
-    entry: restore the stranded archive if the real path is missing,
-    finish the interrupted cleanup if it is present, and drop tmp junk.
-    """
-    parent = os.path.dirname(os.path.abspath(path)) or "."
-    base = os.path.basename(os.path.abspath(path))
-    if not os.path.isdir(parent):
-        return
-    names = os.listdir(parent)
-    olds = [d for d in names if d.startswith(base + "__old_")]
-    if olds and not os.path.exists(path):
-        # a crash during rollback can leave TWO stashes; the LATEST one
-        # is the later archive state — restoring an earlier one would
-        # resurrect the older archive. Order by the monotonic epoch-ns
-        # encoded in the stash name (_stash_name): directory mtimes tie
-        # within filesystem timestamp granularity and can be disturbed
-        # by tooling, making an mtime-only 'latest' pick arbitrary.
-        # Legacy stashes without the epoch field fall back to mtime on
-        # the same ns scale, so mixed old/new stash sets still order by
-        # (approximate) creation time.
-        def stamp(d: str) -> tuple[int, str]:
-            suffix = d[len(base + "__old_"):]
-            head = suffix.split("_", 1)[0]
-            if len(head) == 20 and head.isdigit():
-                return (int(head), d)
-            return (int(os.path.getmtime(os.path.join(parent, d)) * 1e9), d)
-
-        olds.sort(key=stamp)
-        os.rename(os.path.join(parent, olds.pop()), path)
-    # stale-stash/tmp sweeps tolerate a concurrent entry having already
-    # deleted the same sibling: append_day_partitioned is documented
-    # safe beside the single merger/compactor, and BOTH call this — a
-    # bare rmtree racing the other entry's sweep raises FileNotFoundError
-    # and fails a healthy micro-batch
-    for d in olds:
-        shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
-    for d in names:
-        if d.startswith(base + "__tmp_"):
-            shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
-
-
-def upsert_parquet(new_df: DataFrame, path: str, keys: list[str], order_col: str) -> None:
-    """Merge new_df into the parquet dataset at `path`, keeping the row
-    with the greatest `order_col` per key (late/duplicate handling)."""
-    spark = new_df.sparkSession
-    _restore_orphans(path)
-    layout = _layout(path)
-    if layout == "partitioned":
-        raise ValueError(
-            f"{path} is a day-partitioned archive; use "
-            f"upsert_parquet_partitioned (the flat merge would rewrite "
-            f"it flat and destroy the partition layout)"
-        )
-    if layout == "flat":
-        existing = spark.read.parquet(path)
-        merged = existing.unionByName(new_df, allowMissingColumns=True)
-    else:
-        merged = new_df
-    w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
-    deduped = merged.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
-
-    tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
-    deduped.write.mode("overwrite").parquet(tmp)
-    # crash-safe swap: move the OLD data aside before promoting the new
-    # — the previous rmtree-then-rename left a window where a driver
-    # crash lost the whole archive, and the checkpoint replay would then
-    # rebuild it from the last micro-batch alone
-    trash = _stash_name(path)
-    if os.path.exists(path):
-        os.rename(path, trash)
-    try:
-        os.rename(tmp, path)
-    except Exception:
-        if os.path.exists(trash):  # roll the old data back
-            os.rename(trash, path)
-        shutil.rmtree(tmp, ignore_errors=True)  # don't strand the failed promote
-        raise
-    if os.path.exists(trash):
-        shutil.rmtree(trash)
 
 
 class _scoped_conf:
@@ -175,70 +85,9 @@ class _scoped_conf:
                 self.spark.conf.set(k, old)
 
 
-def _commit_stage(spark: SparkSession, stage: str, path: str) -> None:
-    """Promote a completed stage (fully merged touched-day data) into the
-    archive via dynamic partition overwrite: only the day partitions
-    present in the stage are replaced; every other partition's files are
-    not opened, not rewritten, not touched. Idempotent — re-committing
-    the same stage replaces the same days with the same rows."""
-    with _scoped_conf(
-        spark,
-        **{
-            "spark.sql.sources.partitionOverwriteMode": "dynamic",
-            # partition values stay plain strings on the round-trip —
-            # type inference would read day=2024-01-03 back as DATE and
-            # flip the archive's column type vs the batch's
-            "spark.sql.sources.partitionColumnTypeInference.enabled": "false",
-        },
-    ):
-        staged = spark.read.parquet(stage)
-        staged.write.mode("overwrite").partitionBy(DAY_COL).parquet(path)
-    # drop the _SUCCESS marker FIRST: rmtree deletes entries in arbitrary
-    # order, so a crash mid-delete could otherwise leave _SUCCESS with the
-    # data gone, and recovery would then crash-loop trying to re-commit an
-    # unreadable stage; without the marker a partial remnant self-
-    # classifies as half-written garbage on the next entry
-    marker = os.path.join(stage, "_SUCCESS")
-    if os.path.exists(marker):
-        os.remove(marker)
-    shutil.rmtree(stage)
-
-
-def _recover_stage(spark: SparkSession, stage: str, path: str) -> None:
-    """Entry-time restart recovery for the partitioned path: a completed
-    stage (_SUCCESS present) that was never cleaned up means the previous
-    run crashed during or just after commit — its content is the merged
-    truth for its days, so re-commit it; a stage without _SUCCESS is a
-    half-written merge, garbage either way (checkpoint replay re-delivers
-    the batch)."""
-    if not os.path.exists(stage):
-        return
-    if os.path.exists(os.path.join(stage, "_SUCCESS")):
-        # Probe readability BEFORE committing. A marked-complete stage
-        # that cannot be read back (data files lost to a crashed cleanup)
-        # must not wedge the sink in a crash loop — checkpoint replay
-        # re-delivers the batch, so discarding the unreadable stage is
-        # safe. But if the stage IS readable and the re-commit fails
-        # TRANSIENTLY (OOM, disk full, FS hiccup), the stage may be the
-        # only surviving copy of the pre-crash archive rows for its days
-        # (the original crash can have happened mid-dynamic-overwrite) —
-        # discarding it then would silently lose them, so leave it in
-        # place and re-raise: the commit is idempotent and the next
-        # entry retries it.
-        try:
-            spark.read.parquet(stage).schema
-        except Exception:
-            shutil.rmtree(stage, ignore_errors=True)
-            return
-        _commit_stage(spark, stage, path)
-    else:
-        shutil.rmtree(stage)
-
-
 # --- file-level pruned merge (r8): bound write amplification ----------------
 
 _BACKFILL_CHUNK_DAYS = 30  # days staged per commit on deep backfills
-_MANIFEST = "_MERGE_MANIFEST.json"
 # driver-side guard: above this many distinct (day, key) pairs the batch
 # is fleet-wide and file pruning cannot help — fall back to whole-day
 # selection instead of collecting an unbounded control-plane list
@@ -420,6 +269,10 @@ def _select_files(day_dir: str, batch_keys: list | None, prune_col: str) -> tupl
     return replace, keep
 
 
+def _stage_path(path: str) -> str:
+    return f"{path}__stage"
+
+
 def _manifest_path(path: str) -> str:
     """The merge manifest lives BESIDE the stage, not inside it: the
     stage write's mode("overwrite") clears the stage directory, and the
@@ -431,10 +284,13 @@ def _manifest_path(path: str) -> str:
 def _write_manifest(path: str, replaced: list[str]) -> None:
     """Atomic manifest write (tmp + rename): a crash mid-write must not
     leave a torn JSON at the final name — recovery decisions key off the
-    manifest's presence and content."""
+    manifest's presence and content. The manifest sits beside the
+    archive, so a fresh archive under a not-yet-created directory needs
+    that directory made first."""
     import json
 
     final = _manifest_path(path)
+    os.makedirs(os.path.dirname(os.path.abspath(final)), exist_ok=True)
     tmp = final + ".tmp"
     with open(tmp, "w") as fh:
         json.dump({"replaced": replaced}, fh)
@@ -443,71 +299,62 @@ def _write_manifest(path: str, replaced: list[str]) -> None:
     os.replace(tmp, final)
 
 
-def _recover_file_merge(spark: SparkSession, stage: str, path: str) -> bool:
-    """Entry-time recovery for a file-level merge. The writer's ordering
-    is manifest FIRST, stage write second, promote third — so:
+def _recover_file_merge(path: str) -> None:
+    """Entry-time recovery, run by every entry that commits (merge,
+    compact, migrate). The writer's ordering is manifest FIRST, stage
+    write second, promote third, and the manifest is removed only after
+    the stage's rmtree — so:
 
     - manifest + staged _SUCCESS: crashed mid-promote; re-promote
       (idempotent: moves skip files already in place, deletes skip
       files already gone).
     - manifest, no completed stage: crashed before/during the stage
-      write; discard both — checkpoint replay re-delivers the batch.
-    - completed stage, NO manifest: NOT ours — return False so the
-      legacy full-day recovery (_recover_stage) judges it. The
-      manifest-first ordering is what makes this dichotomy sound: a
-      file-merge stage can never exist without its manifest, so a
-      manifest-less _SUCCESS stage is always legacy full-day truth.
-      (The pre-ordering code wrote the manifest AFTER the stage; a
-      crash in that window made the legacy recovery dynamic-overwrite
-      whole days with a files-subset stage — silent row loss for every
-      pruned-out keep file.)
-    - torn/unreadable manifest (only possible from a legacy writer —
-      _write_manifest is tmp+rename): discard manifest and stage
-      rather than crash-looping the sink; replay re-delivers.
+      write, or during the stage cleanup after a finished promote;
+      discard both — checkpoint replay re-delivers the batch.
+    - stage, NO manifest: no writer of this archive leaves one, so the
+      stage is foreign. Refuse with a ValueError and touch neither the
+      stage nor the archive: a commit guessed from a stage alone is how
+      a files-subset stage once overwrote whole days.
+    - torn manifest (_write_manifest is tmp+rename, so not one of ours
+      either): discard manifest and stage rather than crash-looping the
+      sink; replay re-delivers.
     """
     import json
 
-    tmp = _manifest_path(path) + ".tmp"
-    if os.path.exists(tmp):
-        os.remove(tmp)  # torn tmp from a crashed _write_manifest
+    stage = _stage_path(path)
     manifest = _manifest_path(path)
-    legacy = os.path.join(stage, _MANIFEST)  # pre-r8.1 in-stage location
-    if not os.path.exists(manifest) and not os.path.exists(legacy):
-        return False
-    try:
-        with open(manifest if os.path.exists(manifest) else legacy) as fh:
-            json.load(fh)["replaced"]
-    except Exception:
-        shutil.rmtree(stage, ignore_errors=True)
-        if os.path.exists(manifest):
-            os.remove(manifest)
-        return True
-    if os.path.exists(os.path.join(stage, "_SUCCESS")):
+    if os.path.exists(manifest + ".tmp"):
+        os.remove(manifest + ".tmp")  # torn tmp from a crashed _write_manifest
+    if not os.path.exists(manifest):
+        if os.path.exists(stage):
+            raise ValueError(
+                f"{stage} has no merge manifest ({manifest}); no writer of "
+                f"{path} leaves a stage without one, so it is not committed "
+                f"or discarded automatically — inspect it and remove it"
+            )
+        return
+    with open(manifest) as fh:
         try:
-            spark.read.parquet(stage).schema
-        except Exception:
-            shutil.rmtree(stage, ignore_errors=True)
-            if os.path.exists(manifest):
-                os.remove(manifest)
-            return True
-        _promote_file_merge(stage, path)
+            json.load(fh)["replaced"]
+            torn = False
+        except (ValueError, KeyError, TypeError):
+            torn = True
+    if not torn and os.path.exists(os.path.join(stage, "_SUCCESS")):
+        _promote_file_merge(path)
     else:
         shutil.rmtree(stage, ignore_errors=True)
-        if os.path.exists(manifest):
-            os.remove(manifest)
-    return True
+        os.remove(manifest)
 
 
-def _promote_file_merge(stage: str, path: str, prune_col: str | None = None) -> None:
+def _promote_file_merge(path: str, prune_col: str | None = None) -> None:
     """Idempotent file-level promote: move every staged day's new files
     into the archive (skip ones already there), THEN delete the replaced
     files listed in the manifest (skip ones already gone). A crash at
     any point re-runs cleanly on the next entry; until recovery the
     archive may transiently hold both old and new files for the merged
-    keys — the single-writer + recover-on-entry contract, same as the
-    legacy stage protocol. The manifest is deleted LAST: it must outlive
-    the replaced-file deletes so an interrupted promote still knows what
-    to finish.
+    keys — the single-writer + recover-on-entry contract. The manifest
+    is deleted LAST: it must outlive the replaced-file deletes so an
+    interrupted promote still knows what to finish.
 
     With `prune_col`, each touched day's `_key_ranges.json` sidecar is
     refreshed after the deletes (r9): the sidecar is a pure optimization
@@ -517,9 +364,8 @@ def _promote_file_merge(stage: str, path: str, prune_col: str | None = None) -> 
     make it wrong, only absent."""
     import json
 
+    stage = _stage_path(path)
     manifest = _manifest_path(path)
-    if not os.path.exists(manifest):
-        manifest = os.path.join(stage, _MANIFEST)  # legacy in-stage
     with open(manifest) as fh:
         replaced = json.load(fh)["replaced"]
     touched_days: list[str] = []
@@ -546,9 +392,34 @@ def _promote_file_merge(stage: str, path: str, prune_col: str | None = None) -> 
     if os.path.exists(marker):
         os.remove(marker)
     shutil.rmtree(stage)
-    sibling = _manifest_path(path)
-    if os.path.exists(sibling):
-        os.remove(sibling)
+    os.remove(manifest)
+
+
+def _read_files(spark: SparkSession, path: str, files: list[str]) -> DataFrame:
+    """Read archive files with the union of their columns. A column that
+    arrived after a file was written (schema evolution: a new sensor
+    field) is absent from that file, and Spark's reader takes the schema
+    from ONE file — when it picks an older one, the merge silently drops
+    the column from every row it rewrites. Footer schemas are read on
+    the driver (O(files), no Spark job); the schema-merging read, which
+    costs a job, runs only when the files actually differ."""
+    import pyarrow.parquet as pq
+
+    reader = spark.read.option("basePath", path)
+    if len({tuple(pq.read_schema(f).names) for f in files}) > 1:
+        reader = reader.option("mergeSchema", "true")
+    return reader.parquet(*files)
+
+
+def _commit(path: str, replaced: list[str], staged: DataFrame, prune_col: str | None) -> None:
+    """The one commit protocol: manifest, stage, promote. The manifest
+    goes BEFORE the stage write — the ordering that makes a
+    manifest-less stage foreign (_recover_file_merge). The stage write
+    is an ACTION over a plan that may read `path`; it fully
+    materializes before the promote mutates `path`."""
+    _write_manifest(path, replaced)
+    _stage_write(staged, _stage_path(path), prune_col)
+    _promote_file_merge(path, prune_col)
 
 
 def upsert_parquet_partitioned(
@@ -589,35 +460,24 @@ def upsert_parquet_partitioned(
     batch's touched days, so latest-row-wins resolves within a day — a
     key that did not pin the timestamp could have an older row for the
     same key sitting on an UNTOUCHED day, silently surviving alongside
-    the new one; time-free keys need the full-archive merge
-    (`upsert_parquet`). Single writer per archive path (the Structured
-    Streaming foreachBatch guarantee): concurrent writers would race
-    the fixed stage directory and the dynamic overwrite — multi-writer
-    archives are what Delta/Iceberg MERGE INTO exists for."""
+    the new one; time-free keys are refused (there is no full-archive
+    merge — `latest_view` over the whole archive resolves them on
+    read). Single writer per archive path (the Structured Streaming
+    foreachBatch guarantee): concurrent writers would race the fixed
+    stage directory and manifest — multi-writer archives are what
+    Delta/Iceberg MERGE INTO exists for."""
     if ts_col not in keys:
         raise ValueError(
             f"ts_col {ts_col!r} must be part of keys {keys!r}: the "
             f"touched-day merge cannot resolve latest-row-wins across "
-            f"days for a key that does not pin the timestamp — use "
-            f"upsert_parquet (full-archive merge) for time-free keys"
+            f"days for a key that does not pin the timestamp"
         )
     spark = new_df.sparkSession
-    # a crashed migrate_to_partitioned strands the archive in a __old_
-    # stash with `path` absent; entering through any sink then MUST
-    # restore it first — otherwise a fresh archive grows at `path` and a
-    # later orphan pass deletes the stash (path exists ⇒ stale) along
-    # with the entire pre-migration history
-    _restore_orphans(path)
-    stage = f"{path}__stage"
-    if not _recover_file_merge(spark, stage, path):
-        _recover_stage(spark, stage, path)
+    _recover_file_merge(path)
 
-    batch = new_df.withColumn(
-        DAY_COL,
-        F.coalesce(F.date_format(F.col(ts_col), "yyyy-MM-dd"), F.lit(NULL_DAY)),
-    )
-    # persist unconditionally: even a single-chunk merge drives THREE
-    # actions over the batch lineage (the days collect below, the
+    batch = new_df.withColumn(DAY_COL, _day(ts_col))
+    # persist unconditionally: even a single-chunk merge drives up to
+    # THREE actions over the batch lineage (the days collect below, the
     # (day, key) prune collect, the stage write) — unpersisted, each one
     # re-evaluates the micro-batch source on the hot ingest path
     batch.persist()
@@ -629,12 +489,10 @@ def upsert_parquet_partitioned(
         batch.unpersist()
         return
 
-    layout = _layout(path)
-    if layout == "flat":
+    if _layout(path) == "flat":
         raise ValueError(
-            f"{path} is a flat parquet archive; use upsert_parquet "
-            f"(the partitioned merge needs the day= hive layout — "
-            f"rewrite the archive with write_date_partitioned first)"
+            f"{path} is a flat parquet archive; the merge needs the day= "
+            f"hive layout — run migrate_to_partitioned on it once first"
         )
 
     # prune_col: the axis batches are sparse on (a late-data batch
@@ -650,69 +508,33 @@ def upsert_parquet_partitioned(
     try:
         for chunk in chunks:
             cbatch = batch.where(F.col(DAY_COL).isin(chunk))
-            w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
-            if layout != "partitioned":
-                deduped = (
-                    cbatch.withColumn("__rn", F.row_number().over(w))
-                    .where(F.col("__rn") == 1)
-                    .drop("__rn")
-                )
-                # manifest BEFORE the stage write — the ordering that
-                # keeps recovery sound (_recover_file_merge docstring)
-                _write_manifest(path, [])
-                _stage_write(deduped, stage, prune_col)
-                _promote_file_merge(stage, path, prune_col)
-                layout = "partitioned"  # subsequent chunks merge
-                continue
-
+            day_dirs = {d: os.path.join(path, f"{DAY_COL}={d}") for d in chunk}
+            day_dirs = {d: p for d, p in day_dirs.items() if os.path.isdir(p)}
             # file pruning: per touched day, select only the files whose
-            # prune_col footer range intersects the batch's keys
-            if prune_col is not None:
+            # prune_col footer range intersects the batch's keys. No
+            # existing day (a fresh archive, new days) means nothing to
+            # select from, so the (day, key) collect is skipped.
+            keys_by_day: dict | None = None
+            if day_dirs and prune_col is not None:
                 kd = cbatch.select(DAY_COL, prune_col).distinct().limit(_MAX_PRUNE_KEYS + 1).collect()
-                keys_by_day: dict | None = {}
-                if len(kd) > _MAX_PRUNE_KEYS:
-                    keys_by_day = None  # fleet-wide batch: prune by day only
-                else:
+                if len(kd) <= _MAX_PRUNE_KEYS:  # else fleet-wide: prune by day only
+                    keys_by_day = {}
                     for r in kd:
                         keys_by_day.setdefault(r[0], []).append(r[1])
-            else:
-                keys_by_day = None
             replace_files: list[str] = []
-            for day in chunk:
-                day_dir = os.path.join(path, f"{DAY_COL}={day}")
-                if not os.path.isdir(day_dir):
-                    continue
+            for day, day_dir in day_dirs.items():
                 bkeys = None if keys_by_day is None else keys_by_day.get(day, [])
-                rep, _keep = _select_files(day_dir, bkeys, prune_col)
-                replace_files.extend(rep)
+                replace_files.extend(_select_files(day_dir, bkeys, prune_col)[0])
 
             with _scoped_conf(
                 spark,
                 **{"spark.sql.sources.partitionColumnTypeInference.enabled": "false"},
             ):
+                merged = cbatch
                 if replace_files:
-                    existing = spark.read.option("basePath", path).parquet(*replace_files)
+                    existing = _read_files(spark, path, replace_files)
                     merged = existing.unionByName(cbatch, allowMissingColumns=True)
-                else:
-                    merged = cbatch
-                deduped = (
-                    merged.withColumn("__rn", F.row_number().over(w))
-                    .where(F.col("__rn") == 1)
-                    .drop("__rn")
-                )
-                # manifest BEFORE the stage write: a stage that reaches
-                # _SUCCESS without its manifest would otherwise be
-                # promoted by the LEGACY recovery as full-day truth,
-                # dynamic-overwriting the day with only the selected
-                # files' rows — deleting every pruned-out keep file's
-                # rows. With the manifest durably first, that window
-                # cannot exist (_recover_file_merge).
-                _write_manifest(path, replace_files)
-                # the stage write is an ACTION over a plan that reads
-                # `path`; it must fully materialize before the promote
-                # mutates `path`
-                _stage_write(deduped, stage, prune_col)
-            _promote_file_merge(stage, path, prune_col)
+                _commit(path, replace_files, latest_view(merged, keys, order_col), prune_col)
     finally:
         batch.unpersist()
 
@@ -767,23 +589,18 @@ def append_day_partitioned(
     for recovery — so appends are safe to run concurrently with the
     ONE merger/compactor the single-writer contract allows (an append
     that ran recovery here could destroy a LIVE compaction's manifest
-    mid-stage-write, and the orphaned _SUCCESS stage would then read
-    as legacy full-day truth — the exact loss the manifest ordering
-    exists to prevent). A compaction crash before append only leaves
+    mid-stage-write, leaving a manifest-less stage that every later
+    merge/compact entry must refuse). A compaction crash before append
+    only leaves
     the day transiently un-deduped; the next compact/merge entry
     recovers it. Files appended while a compaction is in flight are
     not in its manifest, so its promote never deletes them."""
-    _restore_orphans(path)
-    layout = _layout(path)
-    if layout == "flat":
+    if _layout(path) == "flat":
         raise ValueError(
             f"{path} is a flat parquet archive; append_day_partitioned "
             f"needs the day= hive layout (migrate_to_partitioned first)"
         )
-    batch = new_df.withColumn(
-        DAY_COL,
-        F.coalesce(F.date_format(F.col(ts_col), "yyyy-MM-dd"), F.lit(NULL_DAY)),
-    )
+    batch = new_df.withColumn(DAY_COL, _day(ts_col))
     if partitions is not None:
         batch = batch.repartition(partitions)
     batch.write.mode("append").partitionBy(DAY_COL).parquet(path)
@@ -816,10 +633,7 @@ def compact_days(
             f"ts_col {ts_col!r} must be part of keys {keys!r} (see "
             f"upsert_parquet_partitioned: dedup is per-day)"
         )
-    _restore_orphans(path)
-    stage = f"{path}__stage"
-    if not _recover_file_merge(spark, stage, path):
-        _recover_stage(spark, stage, path)
+    _recover_file_merge(path)
     if _layout(path) != "partitioned":
         raise ValueError(f"{path} is not a day-partitioned archive")
     on_disk = sorted(
@@ -843,14 +657,8 @@ def compact_days(
             spark,
             **{"spark.sql.sources.partitionColumnTypeInference.enabled": "false"},
         ):
-            deduped = latest_view(
-                spark.read.option("basePath", path).parquet(*replace_files),
-                keys,
-                order_col,
-            )
-            _write_manifest(path, replace_files)
-            _stage_write(deduped, stage, prune_col)
-        _promote_file_merge(stage, path, prune_col)
+            existing = _read_files(spark, path, replace_files)
+            _commit(path, replace_files, latest_view(existing, keys, order_col), prune_col)
     return targets
 
 
@@ -1000,44 +808,28 @@ def latest_view(archive: DataFrame, keys: list[str], order_col: str) -> DataFram
 
 
 def migrate_to_partitioned(spark: SparkSession, path: str, ts_col: str = "ts") -> bool:
-    """One-shot flat -> day-partitioned archive migration, so an old
-    archive can adopt the O(touched-days) sink. Reads the flat dataset,
-    rewrites it hive-partitioned into a tmp sibling, then swaps with the
-    same stash-and-rename protocol as the flat upsert (a crash at any
-    point leaves either the old archive, or a `__old_` stash that
-    _restore_orphans puts back). Returns True if a migration happened;
-    False if the archive is already partitioned or absent (idempotent —
-    safe to call unconditionally at pipeline setup).
+    """One-shot flat -> day-partitioned archive migration, so an archive
+    laid down flat (top-level parquet files) can adopt the sinks. It is
+    one commit of the sinks' own protocol: the manifest lists every
+    top-level file as replaced, the stage is the day-partitioned copy,
+    and the promote moves the day directories in and deletes the flat
+    files. A crash at any point is finished or discarded by the next
+    entry of any committing sink (merge, compact, or this function).
+    Returns True if a migration happened; False if the archive is
+    already partitioned or absent (idempotent — safe to call
+    unconditionally at pipeline setup).
 
-    NOT concurrency-safe: unlike append_day_partitioned (documented safe
-    beside the single merger/compactor), this must run with NO other
-    sink entry on the same path — a concurrent entry's _restore_orphans
-    can rename the stash back during the swap window and fail the final
-    rename. Run it once at adoption time, pipeline stopped."""
-    _restore_orphans(path)
+    Same single-writer contract as the merge and the compactor: run it
+    with no other merge or compaction on the same path (appends refuse
+    a flat archive, so they cannot interleave until it is migrated)."""
+    _recover_file_merge(path)
     if _layout(path) != "flat":
         return False
-    df = spark.read.parquet(path)
-    tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
-    (
-        df.withColumn(
-            DAY_COL,
-            F.coalesce(F.date_format(F.col(ts_col), "yyyy-MM-dd"), F.lit(NULL_DAY)),
-        )
-        .write.mode("overwrite")
-        .partitionBy(DAY_COL)
-        .parquet(tmp)
+    flat = sorted(
+        os.path.join(path, f) for f in os.listdir(path) if os.path.isfile(os.path.join(path, f))
     )
-    trash = _stash_name(path)
-    os.rename(path, trash)
-    try:
-        os.rename(tmp, path)
-    except Exception:
-        if os.path.exists(trash):
-            os.rename(trash, path)
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    shutil.rmtree(trash)
+    rows = _read_files(spark, path, [f for f in flat if f.endswith(".parquet")])
+    _commit(path, flat, rows.withColumn(DAY_COL, _day(ts_col)), None)
     return True
 
 
@@ -1048,12 +840,14 @@ def write_date_partitioned(df: DataFrame, path: str, ts_col: str = "ts") -> None
     reference gets the same effect from per-period WHERE clauses against
     indexed MySQL, e.g. FilterShow.py:419-429 chunking).
 
-    Day is derived, stored as a partition column; readers filtering on
-    `day` (or on `ts` through it) touch only matching directories —
-    verified by the partition-pruning test."""
+    Day is derived exactly as the sinks derive it (null timestamps on
+    NULL_DAY), stored as a partition column; readers filtering on `day`
+    (or on `ts` through it) touch only matching directories — verified
+    by the partition-pruning test. The result is a sink archive: later
+    merges find every row in the day they derive for it."""
     (
-        df.withColumn("day", F.date_format(F.col(ts_col), "yyyy-MM-dd"))
+        df.withColumn(DAY_COL, _day(ts_col))
         .write.mode("overwrite")
-        .partitionBy("day")
+        .partitionBy(DAY_COL)
         .parquet(path)
     )

@@ -259,7 +259,6 @@ def run_lines_stream(
     checkpoint: str,
     out_dir: str,
     watermark: str = "2 hours",
-    partitioned: bool | None = None,
     trigger: str | None = "available_now",
     archive_mode: str = "merge",
     append_partitions: int | None = None,
@@ -275,23 +274,18 @@ def run_lines_stream(
     for as-fast-as-possible micro-batches (required for the socket
     source, which cannot replay and so cannot run availableNow).
 
-    Archive layout (`partitioned`): None (the default) auto-selects —
-    an EXISTING archive keeps its on-disk layout (flat stays flat,
-    day-partitioned stays partitioned; no silent migration mid-stream),
-    and a FRESH archive lands day-partitioned, the scale path (per-batch
-    I/O = touched days only, via dynamic partition overwrite). A new
-    pipeline therefore gets the O(touched-days) sink without knowing the
-    flag exists; `partitioned=False` forces the flat O(archive)/batch
-    merge (tiny archives, tests), True forces the scale path (and, per
-    upsert_parquet_partitioned's layout guard, refuses a flat archive —
-    run sinks.upsert.migrate_to_partitioned once first).
+    Archive layout: always day-partitioned (`day=YYYY-MM-DD/`), so
+    per-batch I/O is the touched days — and within them the touched
+    files — only. A flat archive laid down by an older deployment is
+    refused by the sinks' layout guard (no silent migration
+    mid-stream): run sinks.upsert.migrate_to_partitioned on it once
+    first.
 
     `archive_mode`: "merge" (default) upserts each micro-batch —
     latest-row-wins visible immediately, but a fleet-wide steady state
     rewrites each day ~batches/2 times (SCALING.md). "append" writes
-    only the batch's own bytes (amplification 1; requires the
-    partitioned layout) and defers dedup to a scheduled
-    `sinks.upsert.compact_days` (or `latest_view` on read) — the
+    only the batch's own bytes (amplification 1) and defers dedup to a
+    scheduled `sinks.upsert.compact_days` (or `latest_view` on read) — the
     at-scale ingest shape: append all day, compact the closed day once.
     `append_partitions` is append_day_partitioned's files-per-batch
     bound: without it each micro-batch writes shuffle-partition-count
@@ -330,18 +324,14 @@ def run_lines_stream(
     Returns the StreamingQuery (caller awaits/stops)."""
     from ..session import _STATE_STORE_PROVIDERS
     from ..sinks.upsert import (
-        _layout,
         _scoped_conf,
         append_day_partitioned,
         compact_closed_days,
-        upsert_parquet,
         upsert_parquet_partitioned,
     )
 
     if archive_mode not in ("merge", "append"):
         raise ValueError(f"archive_mode {archive_mode!r}: use 'merge' or 'append'")
-    if archive_mode == "append" and partitioned is False:
-        raise ValueError("archive_mode='append' requires the partitioned layout")
 
     fact = (
         decode_stream(parse_envelopes(lines))
@@ -387,17 +377,9 @@ def run_lines_stream(
             finally:
                 batch_df.unpersist()
             return
-        use_partitioned = partitioned
-        if use_partitioned is None:
-            # resolved per batch, not at stream build: the archive may
-            # not exist until the first batch commits
-            use_partitioned = _layout(out_dir) != "flat"
-        if use_partitioned:
-            upsert_parquet_partitioned(
-                batch_df, out_dir, keys=["kit_id", "ts", "field"], order_col="ingest_ts", ts_col="ts"
-            )
-        else:
-            upsert_parquet(batch_df, out_dir, keys=["kit_id", "ts", "field"], order_col="ingest_ts")
+        upsert_parquet_partitioned(
+            batch_df, out_dir, keys=["kit_id", "ts", "field"], order_col="ingest_ts", ts_col="ts"
+        )
 
     writer = fact.writeStream.foreachBatch(sink).option("checkpointLocation", checkpoint)
     if trigger == "available_now":
@@ -424,13 +406,12 @@ def run_file_stream(
     checkpoint: str,
     out_dir: str,
     watermark: str = "2 hours",
-    partitioned: bool | None = None,
     archive_mode: str = "merge",
     append_partitions: int | None = None,
     auto_compact: bool = False,
 ):
-    """S2 live twin: readStream on a drop directory of MQTT dump files.
-    Fresh archives land day-partitioned (see run_lines_stream).
+    """S2 live twin: readStream on a drop directory of MQTT dump files
+    into a day-partitioned archive (see run_lines_stream).
 
     `auto_compact` is strictly OPT-IN (default False, matching
     run_lines_stream): enabling it makes THIS stream the archive's sole
@@ -441,8 +422,8 @@ def run_file_stream(
     backfill prep before the first auto-compacting run."""
     return run_lines_stream(
         spark.readStream.text(in_dir), checkpoint, out_dir, watermark,
-        partitioned=partitioned, archive_mode=archive_mode,
-        append_partitions=append_partitions, auto_compact=auto_compact,
+        archive_mode=archive_mode, append_partitions=append_partitions,
+        auto_compact=auto_compact,
     )
 
 
@@ -478,7 +459,6 @@ def run_socket_stream(
     checkpoint: str,
     out_dir: str,
     watermark: str = "2 hours",
-    partitioned: bool | None = None,
 ):
     """S1 live-PUSH transport via Spark's built-in socket source: an
     MQTT bridge (e.g. `mosquitto_sub ... | nc -l`) pushes '<topic>
@@ -500,6 +480,4 @@ def run_socket_stream(
         .option("port", port)
         .load()
     )
-    return run_lines_stream(
-        lines, checkpoint, out_dir, watermark, partitioned=partitioned, trigger=None
-    )
+    return run_lines_stream(lines, checkpoint, out_dir, watermark, trigger=None)

@@ -88,32 +88,81 @@ def test_upsert_schema_evolution(spark, tmp_path):
     """SURVEY §1.2: a new sensor field appearing mid-stream is a data
     event — the upsert sink merges batches with differing schemas
     (the reference ALTERs MySQL tables on the fly; we unionByName with
-    allowMissingColumns)."""
+    allowMissingColumns). The file-level merge adds a case the
+    reference never had: a new column arrives in a NEW file beside
+    pruned-out files that are kept without it, and a later batch (which
+    itself lacks the column) touches both kinds of file — the column's
+    values must survive that rewrite."""
     import datetime as dt
+    import os
 
     from pyspark.sql import functions as F
 
-    from mysense_spark.sinks.upsert import upsert_parquet
+    from mysense_spark.sinks.upsert import upsert_parquet_partitioned
 
+    keys = ["kit_id", "ts", "field"]
     path = str(tmp_path / "archive")
     t0 = dt.datetime(2024, 1, 1)
     b1 = spark.createDataFrame(
         [("k1", t0, "pm25", 10.0)], "kit_id string, ts timestamp, field string, value double"
     ).withColumn("ingest_ts", F.current_timestamp())
-    upsert_parquet(b1, path, keys=["kit_id", "ts", "field"], order_col="ingest_ts")
+    upsert_parquet_partitioned(b1, path, keys=keys, order_col="ingest_ts")
 
     # second batch carries a brand-new column (unit) and a new field
-
     b2 = spark.createDataFrame(
         [("k1", t0, "gas", 270.0, "kOhm")],
         "kit_id string, ts timestamp, field string, value double, unit string",
     ).withColumn("ingest_ts", F.current_timestamp())
-    upsert_parquet(b2, path, keys=["kit_id", "ts", "field"], order_col="ingest_ts")
+    upsert_parquet_partitioned(b2, path, keys=keys, order_col="ingest_ts")
 
     out = {r["field"]: r for r in spark.read.parquet(path).collect()}
     assert set(out) == {"pm25", "gas"}
     assert out["gas"]["unit"] == "kOhm"
     assert out["pm25"]["unit"] is None  # old rows gain NULL for the new column
+
+    # kept-file case: several range-partitioned files without `unit`
+    path = str(tmp_path / "archive_kept")
+    day, ing = dt.datetime(2024, 1, 1, 10), dt.datetime(2024, 6, 1)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        upsert_parquet_partitioned(
+            _mk_batch(spark, [(f"k{c}", day, "pm25", 1.0, ing) for c in "abcdefgh"]),
+            path, keys=keys, order_col="ingest_ts",
+        )
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    day_dir = os.path.join(path, "day=2024-01-01")
+    before = {f for f in os.listdir(day_dir) if f.endswith(".parquet")}
+    assert len(before) > 1, "need kept files for the scenario to bite"
+    # kits beyond every existing file's range: a new file, all old kept
+    upsert_parquet_partitioned(
+        spark.createDataFrame(
+            [("kx", day, "gas", 2.0, ing, "kOhm"), ("kz", day, "gas", 3.0, ing, "kOhm")],
+            "kit_id string, ts timestamp, field string, value double, "
+            "ingest_ts timestamp, unit string",
+        ),
+        path, keys=keys, order_col="ingest_ts",
+    )
+    now = {f for f in os.listdir(day_dir) if f.endswith(".parquet")}
+    assert before < now and len(now - before) == 1
+    # Spark's reader takes its schema from the first listed file; pin
+    # the adverse order (the new-column file lists last) so a merge that
+    # trusts that schema loses `unit` deterministically, not by chance
+    (new,) = now - before
+    os.rename(os.path.join(day_dir, new), os.path.join(day_dir, "zz-" + new))
+    # touches an old file (ka) and the new one (ky falls inside [kx, kz])
+    upsert_parquet_partitioned(
+        _mk_batch(spark, [("ka", day, "pm25", 5.0, dt.datetime(2024, 6, 2)), ("ky", day, "gas", 4.0, ing)]),
+        path, keys=keys, order_col="ingest_ts",
+    )
+    # readers of an evolved archive merge footer schemas themselves
+    got = {
+        r["kit_id"]: (r["value"], r["unit"])
+        for r in spark.read.option("mergeSchema", "true").parquet(path).collect()
+    }
+    assert got["kx"] == (2.0, "kOhm") and got["kz"] == (3.0, "kOhm")
+    assert got["ka"] == (5.0, None) and got["ky"] == (4.0, None)
+    assert len(got) == 11
 
 
 def _mk_batch(spark, rows):
@@ -224,171 +273,103 @@ def test_partitioned_upsert_idempotent_replay(spark, tmp_path):
     assert sorted(map(tuple, spark.read.parquet(path).collect())) == first
 
 
-def test_partitioned_upsert_stage_recovery(spark, tmp_path):
-    """Crash recovery: a completed stage (_SUCCESS present) left behind
-    by a crashed commit is re-committed on the next upsert's entry; a
-    half-written stage (no _SUCCESS) is discarded."""
+def test_manifestless_stage_is_refused(spark, tmp_path):
+    """No writer of the archive leaves a `__stage` without its sibling
+    manifest (the manifest is written before the stage and removed
+    after the stage's rmtree), so a manifest-less stage is foreign —
+    whether complete, half-written or unreadable. Every committing
+    entry (merge, compact, migrate) refuses it with a ValueError naming
+    the stage, and leaves the stage AND the archive byte-identical:
+    guessing a commit from a stage alone is how a files-subset stage
+    once overwrote whole days."""
     import datetime as dt
     import os
+    import shutil
 
-    from mysense_spark.sinks.upsert import upsert_parquet_partitioned
+    import pytest
 
-    path = str(tmp_path / "archive")
+    from mysense_spark.sinks import upsert as U
+
+    keys = ["kit_id", "ts", "field"]
     t0 = dt.datetime(2024, 6, 1)
     d1 = dt.datetime(2024, 1, 1, 8)
-    base = _mk_batch(spark, [("k1", d1, "pm25", 10.0, t0)])
-    upsert_parquet_partitioned(base, path, keys=["kit_id", "ts", "field"], order_col="ingest_ts")
-
-    # fabricate the crash artifact: a fully-written stage holding the
-    # merged truth for day1 (value updated to 11.0) that never committed
+    path = str(tmp_path / "archive")
+    U.upsert_parquet_partitioned(_mk_batch(spark, [("k1", d1, "pm25", 10.0, t0)]), path, keys=keys, order_col="ingest_ts")
     stage = path + "__stage"
-    merged = _mk_batch(spark, [("k1", d1, "pm25", 11.0, dt.datetime(2024, 6, 2))]).withColumn(
+
+    def tree(root):
+        out = {}
+        for d, _dirs, files in os.walk(root):
+            for f in files:
+                with open(os.path.join(d, f), "rb") as fh:
+                    out[os.path.relpath(os.path.join(d, f), root)] = fh.read()
+        return out
+
+    # a complete stage holding other data for day 1
+    _mk_batch(spark, [("k1", d1, "pm25", 11.0, dt.datetime(2024, 6, 2))]).withColumn(
         "day", F.lit("2024-01-01")
-    )
-    merged.write.mode("overwrite").partitionBy("day").parquet(stage)
+    ).write.mode("overwrite").partitionBy("day").parquet(stage)
     assert os.path.exists(os.path.join(stage, "_SUCCESS"))
-
-    # next upsert (touching a different day) must first re-commit the stage
+    archive_before, stage_before = tree(path), tree(stage)
     b2 = _mk_batch(spark, [("k2", dt.datetime(2024, 1, 5, 8), "pm25", 50.0, t0)])
-    upsert_parquet_partitioned(b2, path, keys=["kit_id", "ts", "field"], order_col="ingest_ts")
-    out = {(r["kit_id"], str(r["day"])): r["value"] for r in spark.read.parquet(path).collect()}
-    assert out[("k1", "2024-01-01")] == 11.0  # recovered stage won
-    assert out[("k2", "2024-01-05")] == 50.0
-    assert not os.path.exists(stage)
+    for entry in (
+        lambda: U.upsert_parquet_partitioned(b2, path, keys=keys, order_col="ingest_ts"),
+        lambda: U.compact_days(spark, path, keys=keys, order_col="ingest_ts"),
+        lambda: U.migrate_to_partitioned(spark, path),
+    ):
+        with pytest.raises(ValueError, match="__stage has no merge manifest"):
+            entry()
+        assert tree(path) == archive_before and tree(stage) == stage_before
+        assert not os.path.exists(U._manifest_path(path))
 
-    # half-written stage: no _SUCCESS -> discarded, archive untouched
-    os.makedirs(stage)
-    with open(os.path.join(stage, "part-junk.parquet"), "wb") as fh:
-        fh.write(b"not parquet")
-    b3 = _mk_batch(spark, [("k3", dt.datetime(2024, 1, 6, 8), "pm25", 60.0, t0)])
-    upsert_parquet_partitioned(b3, path, keys=["kit_id", "ts", "field"], order_col="ingest_ts")
-    assert not os.path.exists(stage)
-    out = {(r["kit_id"], str(r["day"])): r["value"] for r in spark.read.parquet(path).collect()}
-    assert out[("k1", "2024-01-01")] == 11.0 and out[("k3", "2024-01-06")] == 60.0
+    # half-written (no _SUCCESS) and unreadable (marker, no data) stages
+    # are refused the same way: neither is ever guessed into garbage
+    for junk in ({"part-junk.parquet": b"not parquet"}, {"_SUCCESS": b""}):
+        shutil.rmtree(stage)
+        os.makedirs(stage)
+        for name, data in junk.items():
+            with open(os.path.join(stage, name), "wb") as fh:
+                fh.write(data)
+        with pytest.raises(ValueError, match="no merge manifest"):
+            U.upsert_parquet_partitioned(b2, path, keys=keys, order_col="ingest_ts")
+        assert tree(path) == archive_before and tree(stage) == junk
+
+    # once the operator removes it, the sink proceeds
+    shutil.rmtree(stage)
+    U.upsert_parquet_partitioned(b2, path, keys=keys, order_col="ingest_ts")
+    out = {r["kit_id"]: r["value"] for r in spark.read.parquet(path).collect()}
+    assert out == {"k1": 10.0, "k2": 50.0}
 
 
 def test_upsert_layout_and_key_guards(spark, tmp_path):
-    """Wrong-variant protection: the flat merge must refuse a day-
-    partitioned archive (it would silently rewrite it flat), the
-    partitioned merge must refuse a flat archive (missing day column),
-    and the partitioned merge must refuse a key set that does not pin
-    the timestamp (latest-row-wins could not resolve across untouched
-    days). Each failure is a loud ValueError, not silent corruption."""
+    """Wrong-input protection: the sinks refuse a flat archive (top-level
+    parquet files laid down outside them — the merge would crash on the
+    missing day column) with a message naming the migration, and the
+    merge refuses a key set that does not pin the timestamp
+    (latest-row-wins could not resolve across untouched days). Each
+    failure is a loud ValueError, not silent corruption."""
     import datetime as dt
 
     import pytest
 
-    from mysense_spark.sinks.upsert import upsert_parquet, upsert_parquet_partitioned
+    from mysense_spark.sinks.upsert import append_day_partitioned, upsert_parquet_partitioned
 
     t0 = dt.datetime(2024, 6, 1)
     batch = _mk_batch(spark, [("k1", dt.datetime(2024, 1, 1, 8), "pm25", 10.0, t0)])
 
-    part = str(tmp_path / "part_archive")
-    upsert_parquet_partitioned(batch, part, keys=["kit_id", "ts", "field"], order_col="ingest_ts")
-    with pytest.raises(ValueError, match="day-partitioned"):
-        upsert_parquet(batch, part, keys=["kit_id", "ts", "field"], order_col="ingest_ts")
-
     flat = str(tmp_path / "flat_archive")
-    upsert_parquet(batch, flat, keys=["kit_id", "ts", "field"], order_col="ingest_ts")
-    with pytest.raises(ValueError, match="flat parquet archive"):
+    batch.write.parquet(flat)
+    with pytest.raises(ValueError, match="flat parquet archive.*migrate_to_partitioned"):
         upsert_parquet_partitioned(
             batch, flat, keys=["kit_id", "ts", "field"], order_col="ingest_ts"
         )
+    with pytest.raises(ValueError, match="flat parquet archive"):
+        append_day_partitioned(batch, flat)
 
     with pytest.raises(ValueError, match="must be part of keys"):
         upsert_parquet_partitioned(
             batch, str(tmp_path / "x"), keys=["kit_id", "field"], order_col="ingest_ts"
         )
-
-
-def test_partitioned_upsert_unreadable_stage_selfheals(spark, tmp_path):
-    """A stage left with _SUCCESS but no readable data (crash during the
-    post-commit cleanup) must not wedge the sink in a crash loop: the
-    next upsert discards it and proceeds."""
-    import datetime as dt
-    import os
-
-    from mysense_spark.sinks.upsert import upsert_parquet_partitioned
-
-    path = str(tmp_path / "archive")
-    t0 = dt.datetime(2024, 6, 1)
-    upsert_parquet_partitioned(
-        _mk_batch(spark, [("k1", dt.datetime(2024, 1, 1, 8), "pm25", 10.0, t0)]),
-        path,
-        keys=["kit_id", "ts", "field"],
-        order_col="ingest_ts",
-    )
-    stage = path + "__stage"
-    os.makedirs(stage)
-    open(os.path.join(stage, "_SUCCESS"), "w").close()  # marker, no data
-
-    upsert_parquet_partitioned(
-        _mk_batch(spark, [("k2", dt.datetime(2024, 1, 2, 8), "pm25", 20.0, t0)]),
-        path,
-        keys=["kit_id", "ts", "field"],
-        order_col="ingest_ts",
-    )
-    assert not os.path.exists(stage)
-    out = {r["kit_id"]: r["value"] for r in spark.read.parquet(path).collect()}
-    assert out == {"k1": 10.0, "k2": 20.0}
-
-
-def test_partitioned_upsert_transient_commit_failure_keeps_stage(
-    spark, tmp_path, monkeypatch
-):
-    """A READABLE completed stage whose re-commit fails transiently (OOM,
-    disk full, FS hiccup) may be the only surviving copy of the pre-crash
-    archive rows for its days — recovery must NOT discard it (the old
-    behavior silently lost those rows): it re-raises with the stage left
-    in place, and the next entry retries the idempotent commit."""
-    import datetime as dt
-    import os
-
-    import pytest
-
-    import mysense_spark.sinks.upsert as up
-
-    path = str(tmp_path / "archive")
-    t0 = dt.datetime(2024, 6, 1)
-    up.upsert_parquet_partitioned(
-        _mk_batch(spark, [("k1", dt.datetime(2024, 1, 1, 8), "pm25", 10.0, t0)]),
-        path,
-        keys=["kit_id", "ts", "field"],
-        order_col="ingest_ts",
-    )
-    # fabricate a crashed-commit artifact: readable stage, merged truth
-    stage = path + "__stage"
-    _mk_batch(spark, [("k1", dt.datetime(2024, 1, 1, 8), "pm25", 11.0, dt.datetime(2024, 6, 2))]).withColumn(
-        "day", F.lit("2024-01-01")
-    ).write.mode("overwrite").partitionBy("day").parquet(stage)
-
-    real_commit = up._commit_stage
-
-    def flaky_commit(spark_, stage_, path_):
-        raise OSError("disk full")
-
-    monkeypatch.setattr(up, "_commit_stage", flaky_commit)
-    with pytest.raises(OSError, match="disk full"):
-        up.upsert_parquet_partitioned(
-            _mk_batch(spark, [("k2", dt.datetime(2024, 1, 5, 8), "pm25", 50.0, t0)]),
-            path,
-            keys=["kit_id", "ts", "field"],
-            order_col="ingest_ts",
-        )
-    assert os.path.exists(os.path.join(stage, "_SUCCESS")), "stage must survive"
-
-    # transient condition clears -> next entry re-commits and proceeds
-    monkeypatch.setattr(up, "_commit_stage", real_commit)
-    up.upsert_parquet_partitioned(
-        _mk_batch(spark, [("k2", dt.datetime(2024, 1, 5, 8), "pm25", 50.0, t0)]),
-        path,
-        keys=["kit_id", "ts", "field"],
-        order_col="ingest_ts",
-    )
-    assert not os.path.exists(stage)
-    out = {(r["kit_id"], str(r["day"])): r["value"] for r in spark.read.parquet(path).collect()}
-    assert out[("k1", "2024-01-01")] == 11.0  # recovered stage won
-    assert out[("k2", "2024-01-05")] == 50.0
 
 
 def test_partitioned_upsert_into_date_partitioned_archive(spark, tmp_path):
@@ -407,79 +388,34 @@ def test_partitioned_upsert_into_date_partitioned_archive(spark, tmp_path):
         [
             ("k1", dt.datetime(2024, 1, 1, 8), "pm25", 10.0, t0),
             ("k1", dt.datetime(2024, 1, 2, 8), "pm25", 20.0, t0),
+            ("k1", None, "pm25", 2.0, t0),
         ],
     )
     write_date_partitioned(bulk, path)
     days_before = sorted(d for d in os.listdir(path) if d.startswith("day="))
-    assert days_before == ["day=2024-01-01", "day=2024-01-02"]
+    # the null-ts row sits on the sinks' NULL_DAY, not in hive's default
+    # partition where no merge would ever find it
+    assert days_before == ["day=0000-00-00", "day=2024-01-01", "day=2024-01-02"]
 
-    # incremental upsert: one late row for day 1 (update) + a new day
+    # incremental upsert: one late row for day 1 (update) + a new day +
+    # a newer version of the null-ts row
     late = _mk_batch(
         spark,
         [
             ("k1", dt.datetime(2024, 1, 1, 8), "pm25", 11.0, dt.datetime(2024, 6, 2)),
             ("k1", dt.datetime(2024, 1, 3, 8), "pm25", 30.0, dt.datetime(2024, 6, 2)),
+            ("k1", None, "pm25", 3.0, dt.datetime(2024, 6, 2)),
         ],
     )
     upsert_parquet_partitioned(late, path, keys=["kit_id", "ts", "field"], order_col="ingest_ts")
-    out = {str(r["day"]): r["value"] for r in spark.read.parquet(path).collect()}
-    assert out == {"2024-01-01": 11.0, "2024-01-02": 20.0, "2024-01-03": 30.0}
-
-
-def test_flat_upsert_orphan_restore(spark, tmp_path):
-    """Crash recovery for the flat swap: a crash between the two renames
-    leaves the archive absent and its data in a __old_ sibling — the next
-    upsert must restore it automatically (no manual surgery, no data
-    rebuilt from the last micro-batch alone)."""
-    import datetime as dt
-    import os
-
-    from mysense_spark.sinks.upsert import upsert_parquet
-
-    path = str(tmp_path / "archive")
-    t0 = dt.datetime(2024, 6, 1)
-    upsert_parquet(
-        _mk_batch(spark, [("k1", dt.datetime(2024, 1, 1), "pm25", 10.0, t0)]),
-        path,
-        keys=["kit_id", "ts", "field"],
-        order_col="ingest_ts",
-    )
-    # simulate the crash window: archive moved aside, promote never ran
-    os.rename(path, path + "__old_deadbeef")
-
-    upsert_parquet(
-        _mk_batch(spark, [("k2", dt.datetime(2024, 1, 2), "pm25", 20.0, t0)]),
-        path,
-        keys=["kit_id", "ts", "field"],
-        order_col="ingest_ts",
-    )
-    out = {r["kit_id"]: r["value"] for r in spark.read.parquet(path).collect()}
-    assert out == {"k1": 10.0, "k2": 20.0}  # stranded data recovered AND merged
-    assert not os.path.exists(path + "__old_deadbeef")
-
-    # double-crash: TWO stashes coexist (crash during a rollback). The
-    # most recently MODIFIED stash is the later archive state and must
-    # win — lexicographic order would resurrect whichever hex sorts
-    # first. The older stash is dropped, not restored.
-    import shutil
-    import time
-
-    older = path + "__old_zzzz"  # lexicographically LAST, temporally first
-    newer = path + "__old_aaaa"  # lexicographically FIRST, temporally last
-    os.rename(path, older)
-    time.sleep(0.05)
-    _mk_batch(spark, [("k9", dt.datetime(2024, 1, 3), "pm25", 90.0, t0)]).write.mode(
-        "overwrite"
-    ).parquet(newer)
-    upsert_parquet(
-        _mk_batch(spark, [("k3", dt.datetime(2024, 1, 4), "pm25", 30.0, t0)]),
-        path,
-        keys=["kit_id", "ts", "field"],
-        order_col="ingest_ts",
-    )
-    out = {r["kit_id"]: r["value"] for r in spark.read.parquet(path).collect()}
-    assert out == {"k9": 90.0, "k3": 30.0}, "newest stash must be the one restored"
-    assert not os.path.exists(older) and not os.path.exists(newer)
+    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
+    try:
+        rows = spark.read.parquet(path).collect()
+    finally:
+        spark.conf.unset("spark.sql.sources.partitionColumnTypeInference.enabled")
+    assert len(rows) == 4, "one row per key"
+    out = {r["day"]: r["value"] for r in rows}
+    assert out == {"0000-00-00": 3.0, "2024-01-01": 11.0, "2024-01-02": 20.0, "2024-01-03": 30.0}
 
 
 def test_calibration_roundtrip(spark):
@@ -1050,11 +986,11 @@ def test_backfill_chunking_with_crash_between_chunks(spark, tmp_path, monkeypatc
     calls = {"n": 0}
     real_promote = U._promote_file_merge
 
-    def crashing_promote(stage, p, prune_col=None):
+    def crashing_promote(p, prune_col=None):
         calls["n"] += 1
         if calls["n"] == 2:
             raise RuntimeError("injected crash between chunks")
-        real_promote(stage, p, prune_col)
+        real_promote(p, prune_col)
 
     monkeypatch.setattr(U, "_promote_file_merge", crashing_promote)
     try:
@@ -1098,7 +1034,7 @@ def test_file_merge_stage_recovery_idempotent(spark, tmp_path):
     upd = _mk_batch(spark, [("k1", day, "pm25", 5.0, dt.datetime(2024, 6, 2))])
     real = U._promote_file_merge
     try:
-        U._promote_file_merge = lambda s, p, pc=None: None  # stage, never promote
+        U._promote_file_merge = lambda p, pc=None: None  # stage, never promote
         U.upsert_parquet_partitioned(upd, path, keys=["kit_id", "ts", "field"], order_col="ingest_ts")
     finally:
         U._promote_file_merge = real
@@ -1116,9 +1052,8 @@ def test_file_merge_stage_recovery_idempotent(spark, tmp_path):
     assert not os.path.exists(U._manifest_path(path)), "manifest outlived its promote"
 
     # half-written manifest stage (no _SUCCESS) is garbage: discarded
-    # (legacy in-stage manifest location — pre-sibling writers)
     os.makedirs(stage)
-    json.dump({"replaced": []}, open(os.path.join(stage, U._MANIFEST), "w"))
+    json.dump({"replaced": []}, open(U._manifest_path(path), "w"))
     U.upsert_parquet_partitioned(
         _mk_batch(spark, [("k9", dt.datetime(2024, 2, 2, 9), "pm25", 8.0, t0)]),
         path, keys=["kit_id", "ts", "field"], order_col="ingest_ts",
@@ -1136,8 +1071,9 @@ def test_file_merge_stage_recovery_idempotent(spark, tmp_path):
     )
     assert {r["value"] for r in spark.read.parquet(path).collect()} == {5.0, 2.0, 7.0, 8.0, 9.0}
 
-    # a TORN manifest (legacy writer crashed mid-json.dump) must not
-    # crash-loop the sink: discard it and the stage, replay re-delivers
+    # a TORN manifest (a writer crashed mid-json.dump without the
+    # tmp+rename) must not crash-loop the sink: discard it and the
+    # stage, replay re-delivers
     os.makedirs(stage)
     open(os.path.join(stage, "_SUCCESS"), "w").close()
     with open(U._manifest_path(path), "w") as fh:
@@ -1154,11 +1090,11 @@ def test_file_merge_stage_recovery_idempotent(spark, tmp_path):
 def test_crash_before_promote_never_loses_pruned_out_rows(spark, tmp_path, monkeypatch):
     """THE data-loss window the manifest-first ordering closes: a
     file-pruned merge whose stage reached _SUCCESS but whose process
-    died before promote. Under manifest-AFTER-stage ordering the legacy
-    recovery saw a manifest-less _SUCCESS stage and dynamic-overwrote
-    the whole day with only the SELECTED files' rows — every pruned-out
-    keep file's rows silently deleted. With the manifest durable first,
-    recovery runs the file-level promote and every kit survives."""
+    died before promote. Under manifest-AFTER-stage ordering a recovery
+    that trusted a manifest-less _SUCCESS stage overwrote the whole day
+    with only the SELECTED files' rows — every pruned-out keep file's
+    rows silently deleted. With the manifest durable first, recovery
+    runs the file-level promote and every kit survives."""
     import datetime as dt
     import os
 
@@ -1182,7 +1118,7 @@ def test_crash_before_promote_never_loses_pruned_out_rows(spark, tmp_path, monke
     upd = _mk_batch(spark, [("kita", day, "pm25", 999.0, dt.datetime(2024, 6, 2))])
     real_promote = U._promote_file_merge
 
-    def crashing_promote(stage, p, prune_col=None):
+    def crashing_promote(p, prune_col=None):
         raise RuntimeError("injected crash before promote")
 
     monkeypatch.setattr(U, "_promote_file_merge", crashing_promote)
@@ -1203,14 +1139,18 @@ def test_crash_before_promote_never_loses_pruned_out_rows(spark, tmp_path, monke
 
 
 def test_crash_point_sweep_recovery_is_total(spark, tmp_path, monkeypatch):
-    """Mechanical durability proof for the pruned-merge protocol: crash
-    at EVERY driver-side filesystem mutation (manifest replace, each
-    promote rename/remove, the marker removal, the stage rmtree, the
-    manifest cleanup) in turn, then replay the batch as checkpoint
-    redelivery would — the recovered archive must equal the uninjected
-    reference at every crash point. The two r8 review bugs (promote of
-    a manifest-less stage; torn-manifest crash loop) were single points
-    in this sequence found by hand; this sweep pins all of them."""
+    """Mechanical durability proof for the one commit protocol, swept
+    over both of its writers that start from a fixed archive: the
+    pruned merge and the flat-archive migration. Crash at EVERY
+    driver-side filesystem mutation (manifest replace, each promote
+    rename/remove, the marker removal, the stage rmtree, the manifest
+    cleanup) in turn, then re-enter as a restart would (merge: the
+    batch redelivered by checkpoint replay; migrate: the migration run
+    again) — the recovered archive must equal the uninjected reference
+    at every crash point, and no stage, manifest or stray flat file may
+    remain. The two r8 review bugs (promote of a manifest-less stage;
+    torn-manifest crash loop) were single points in this sequence found
+    by hand; this sweep pins all of them."""
     import datetime as dt
     import os as _os
     import shutil as _shutil
@@ -1220,26 +1160,19 @@ def test_crash_point_sweep_recovery_is_total(spark, tmp_path, monkeypatch):
     class InjectedCrash(Exception):
         pass
 
+    keys = ["kit_id", "ts", "field"]
     day = dt.datetime(2024, 1, 1, 10)
     t0 = dt.datetime(2024, 6, 1)
     kits = [f"kit{chr(ord('a') + i)}" for i in range(8)]
     base = _mk_batch(spark, [(k, day, "pm25", float(i), t0) for i, k in enumerate(kits)])
     upd = _mk_batch(spark, [("kita", day, "pm25", 999.0, dt.datetime(2024, 6, 2))])
+    ops = {
+        "merge": lambda d: U.upsert_parquet_partitioned(upd, d, keys=keys, order_col="ingest_ts"),
+        "migrate": lambda d: U.migrate_to_partitioned(spark, d),
+    }
 
-    base_dir = str(tmp_path / "base")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        U.upsert_parquet_partitioned(base, base_dir, keys=["kit_id", "ts", "field"], order_col="ingest_ts")
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-    assert len([f for f in _os.listdir(_os.path.join(base_dir, "day=2024-01-01")) if f.endswith(".parquet")]) > 1
-
-    # uninjected reference result
-    ref_dir = str(tmp_path / "ref")
-    _shutil.copytree(base_dir, ref_dir)
-    U.upsert_parquet_partitioned(upd, ref_dir, keys=["kit_id", "ts", "field"], order_col="ingest_ts")
-    expected = {r["kit_id"]: r["value"] for r in spark.read.parquet(ref_dir).collect()}
-    assert expected["kita"] == 999.0 and len(expected) == 8
+    def read(d):
+        return {r["kit_id"]: r["value"] for r in spark.read.parquet(d).collect()}
 
     # fault injection: k-th tmp_path mutation raises; paths outside the
     # sandbox (Spark temp dirs, etc.) pass through untouched
@@ -1270,30 +1203,53 @@ def test_crash_point_sweep_recovery_is_total(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(_os, "replace", wrap("replace"))
     monkeypatch.setattr(_shutil, "rmtree", wrap("rmtree"))
 
-    k = 0
-    while True:
-        run_dir = str(tmp_path / f"run{k}")
-        state["left"] = None
-        real["rmtree"](run_dir, ignore_errors=True)
-        _shutil.copytree(base_dir, run_dir)  # copytree doesn't hit the wrapped calls
-        state["left"], state["seen"] = k, 0
-        crashed = False
-        try:
-            U.upsert_parquet_partitioned(upd, run_dir, keys=["kit_id", "ts", "field"], order_col="ingest_ts")
-        except InjectedCrash:
-            crashed = True
-        state["left"] = None
-        if crashed:
-            # checkpoint replay: same batch redelivered after restart
-            U.upsert_parquet_partitioned(upd, run_dir, keys=["kit_id", "ts", "field"], order_col="ingest_ts")
-        got = {r["kit_id"]: r["value"] for r in spark.read.parquet(run_dir).collect()}
-        assert got == expected, f"crash point {k}: archive diverged: {sorted(got.items())}"
-        assert not _os.path.exists(f"{run_dir}__stage")
-        assert not _os.path.exists(U._manifest_path(run_dir))
-        if not crashed:
-            break  # k exceeded the mutation count: full sequence covered
-        k += 1
-    assert k >= 5, f"sweep covered only {k} mutation points — injection not biting"
+    for name, op in ops.items():
+        # merge starts from a multi-file day archive, migrate from a
+        # multi-file flat one
+        base_dir = str(tmp_path / f"{name}_base")
+        if name == "merge":
+            spark.conf.set("spark.sql.adaptive.enabled", "false")
+            try:
+                U.upsert_parquet_partitioned(base, base_dir, keys=keys, order_col="ingest_ts")
+            finally:
+                spark.conf.set("spark.sql.adaptive.enabled", "true")
+            n_files = len(_os.listdir(_os.path.join(base_dir, "day=2024-01-01")))
+        else:
+            base.repartition(3).write.parquet(base_dir)
+            n_files = len([f for f in _os.listdir(base_dir) if f.endswith(".parquet")])
+        assert n_files > 1
+
+        # uninjected reference result
+        ref_dir = str(tmp_path / f"{name}_ref")
+        _shutil.copytree(base_dir, ref_dir)
+        op(ref_dir)
+        expected = read(ref_dir)
+        assert len(expected) == 8 and expected["kita"] == (999.0 if name == "merge" else 0.0)
+        assert sorted(_os.listdir(ref_dir)) == ["day=2024-01-01"]
+
+        k = 0
+        while True:
+            run_dir = str(tmp_path / f"{name}_run{k}")
+            state["left"] = None
+            _shutil.copytree(base_dir, run_dir)  # copytree doesn't hit the wrapped calls
+            state["left"], state["seen"] = k, 0
+            crashed = False
+            try:
+                op(run_dir)
+            except InjectedCrash:
+                crashed = True
+            state["left"] = None
+            if crashed:
+                op(run_dir)  # the restart's entry finishes or redoes it
+            got = read(run_dir)
+            assert got == expected, f"{name} crash point {k}: archive diverged: {sorted(got.items())}"
+            assert sorted(_os.listdir(run_dir)) == ["day=2024-01-01"], f"{name} crash point {k}"
+            assert not _os.path.exists(f"{run_dir}__stage")
+            assert not _os.path.exists(U._manifest_path(run_dir))
+            if not crashed:
+                break  # k exceeded the mutation count: full sequence covered
+            k += 1
+        assert k >= 5, f"{name} sweep covered only {k} mutation points — injection not biting"
 
 
 def test_append_then_compact_equals_merge(spark, tmp_path):
@@ -1380,7 +1336,7 @@ def test_compact_crash_recovery(spark, tmp_path, monkeypatch):
 
     real_promote = U._promote_file_merge
 
-    def crashing_promote(stage, p, prune_col=None):
+    def crashing_promote(p, prune_col=None):
         raise RuntimeError("injected crash before promote")
 
     monkeypatch.setattr(U, "_promote_file_merge", crashing_promote)
@@ -1401,8 +1357,8 @@ def test_append_never_disturbs_inflight_compaction_state(spark, tmp_path):
     """The documented steady state runs appends CONCURRENTLY with one
     compactor, so append must never touch the stage/manifest — an
     append that 'recovered' a live compaction's manifest mid-stage
-    would orphan a _SUCCESS stage as manifest-less legacy full-day
-    truth (the exact loss mode the manifest ordering closes). Appends
+    would orphan a manifest-less stage that every later merge/compact
+    entry must refuse. Appends
     leave compactor state alone; the next compact entry recovers a
     crashed compaction AND keeps the rows appended after its
     snapshot."""
@@ -1421,7 +1377,7 @@ def test_append_never_disturbs_inflight_compaction_state(spark, tmp_path):
     # crash a compaction after its stage write, before its promote
     real_promote = U._promote_file_merge
     try:
-        U._promote_file_merge = lambda s, p, pc=None: None
+        U._promote_file_merge = lambda p, pc=None: None
         U.compact_days(spark, path, keys=["kit_id", "ts", "field"], order_col="ingest_ts")
     finally:
         U._promote_file_merge = real_promote
@@ -1442,41 +1398,6 @@ def test_append_never_disturbs_inflight_compaction_state(spark, tmp_path):
     rows = {r["kit_id"]: r["value"] for r in spark.read.parquet(path).collect()}
     assert rows == {"k0": 0.0, "k1": 1.0, "k2": 2.0, "k3": 3.0, "k9": 9.0}
     assert not os.path.exists(stage) and not os.path.exists(U._manifest_path(path))
-
-
-def test_sinks_restore_migrate_stash_before_writing(spark, tmp_path):
-    """A crashed migrate_to_partitioned strands the whole archive in a
-    __old_ stash with the real path absent. Every partitioned entry
-    point (append, merge, compact) must restore it BEFORE writing —
-    otherwise a fresh archive grows at the path and a later orphan pass
-    deletes the stash, i.e. the entire pre-migration history."""
-    import datetime as dt
-    import os
-
-    from mysense_spark.sinks import upsert as U
-
-    day = dt.datetime(2024, 1, 1, 10)
-    t0 = dt.datetime(2024, 6, 1)
-    for entry in ("append", "merge", "compact"):
-        path = str(tmp_path / f"arch_{entry}")
-        U.append_day_partitioned(
-            _mk_batch(spark, [("k1", day, "pm25", 1.0, t0)]), path
-        )
-        # simulate the crash window: archive renamed aside, path absent
-        os.rename(path, U._stash_name(path))
-        assert not os.path.exists(path)
-
-        b2 = _mk_batch(spark, [("k2", day, "pm25", 2.0, t0)])
-        if entry == "append":
-            U.append_day_partitioned(b2, path)
-        elif entry == "merge":
-            U.upsert_parquet_partitioned(b2, path, keys=["kit_id", "ts", "field"], order_col="ingest_ts")
-        else:
-            U.compact_days(spark, path, keys=["kit_id", "ts", "field"], order_col="ingest_ts")
-        rows = {r["kit_id"] for r in spark.read.parquet(path).collect()}
-        assert "k1" in rows, f"{entry}: stranded archive not restored before writing"
-        if entry in ("append", "merge"):
-            assert "k2" in rows
 
 
 def test_sink_random_op_interleavings_match_model(spark, tmp_path):

@@ -77,69 +77,68 @@ def test_port3_event_stream(spark, tmp_path):
 
 
 def test_stream_batch_parity_and_upsert_idempotence(spark, tmp_path):
+    """run_file_stream lands the same facts as the batch twin, laid out
+    as day= partitions, and duplicate file delivery stays idempotent
+    through the file-level merge."""
     from mysense_spark.streaming.pipeline import run_file_batch, run_file_stream
 
     in_dir = tmp_path / "in"
     in_dir.mkdir()
     _write_dump(in_dir, "batch1.mqtt", ALL_LINES)
     out_dir = str(tmp_path / "archive")
-    ckpt = str(tmp_path / "ckpt")
-
-    # flat layout forced: this test covers the O(archive) merge; the
-    # auto default (fresh archive -> partitioned) has its own test below
-    q = run_file_stream(spark, str(in_dir), ckpt, out_dir, partitioned=False)
+    q = run_file_stream(spark, str(in_dir), str(tmp_path / "ckpt"), out_dir)
     q.awaitTermination(120)
 
+    assert any(d.startswith("day=") for d in os.listdir(out_dir))
     streamed = spark.read.parquet(out_dir)
     batch = run_file_batch(spark, str(in_dir / "batch1.mqtt"))
     skey = {(r["kit_id"], r["field"]): r["value"] for r in streamed.collect()}
     bkey = {(r["kit_id"], r["field"]): r["value"] for r in batch.collect()}
     assert skey == bkey, "stream result != batch twin"
 
-    # replay the same file again (duplicate delivery) -> no new rows
+    # replay the same records again (duplicate delivery) -> no new rows
     n_before = streamed.count()
     _write_dump(in_dir, "batch2.mqtt", [V2_PORT2, V2_PORT4])
-    # replay with NO flag: auto-select must respect the existing flat
-    # layout (no silent migration mid-stream), not force the scale path
     q2 = run_file_stream(spark, str(in_dir), str(tmp_path / "ckpt2"), out_dir)
     q2.awaitTermination(120)
     assert spark.read.parquet(out_dir).count() == n_before
-    import os
-
-    assert not any(d.startswith("day=") for d in os.listdir(out_dir))
 
 
 def test_stream_default_is_partitioned_and_migration(spark, tmp_path):
-    """A fresh pipeline with NO layout flag lands day-partitioned (the
-    scale path is the default, VERDICT r6 #3), and a legacy flat archive
-    adopts it via the one-shot migrate_to_partitioned helper with rows
-    preserved byte-for-value."""
-    import os
-
+    """A fresh pipeline lands day-partitioned — also when the archive's
+    parent directory does not exist yet — and a flat archive (top-level
+    parquet files) adopts the layout via the one-shot
+    migrate_to_partitioned helper with rows preserved byte-for-value."""
     from mysense_spark.sinks.upsert import migrate_to_partitioned
-    from mysense_spark.streaming.pipeline import run_file_stream
+    from mysense_spark.streaming.pipeline import run_file_batch, run_file_stream
 
     in_dir = tmp_path / "in"
     in_dir.mkdir()
     _write_dump(in_dir, "batch1.mqtt", ALL_LINES)
 
-    # fresh archive, no flag -> partitioned on disk
-    out_dir = str(tmp_path / "archive_default")
-    q = run_file_stream(spark, str(in_dir), str(tmp_path / "ckpt_d"), out_dir)
-    q.awaitTermination(120)
-    assert any(d.startswith("day=") for d in os.listdir(out_dir))
+    # fresh archive -> partitioned on disk; the nested path's parents
+    # are created by the first commit
+    for i, out_dir in enumerate(
+        (str(tmp_path / "archive_default"), str(tmp_path / "new" / "nested" / "archive"))
+    ):
+        q = run_file_stream(spark, str(in_dir), str(tmp_path / f"ckpt_d{i}"), out_dir)
+        q.awaitTermination(120)
+        assert q.exception() is None
+        assert any(d.startswith("day=") for d in os.listdir(out_dir))
+        assert spark.read.parquet(out_dir).count() == 31
 
-    # legacy flat archive -> migrate -> same facts, day= layout, and the
-    # auto-selecting stream keeps appending through the partitioned merge
-    flat_dir = str(tmp_path / "archive_legacy")
-    qf = run_file_stream(spark, str(in_dir), str(tmp_path / "ckpt_f"), flat_dir, partitioned=False)
-    qf.awaitTermination(120)
+    # flat archive -> migrate -> same facts, day= layout, and the stream
+    # keeps appending through the partitioned merge
+    flat_dir = str(tmp_path / "archive_flat")
+    run_file_batch(spark, str(in_dir / "batch1.mqtt")).dropDuplicates(
+        ["kit_id", "ts", "field"]
+    ).write.parquet(flat_dir)
     before = {
         (r["kit_id"], r["ts"], r["field"]): r["value"]
         for r in spark.read.parquet(flat_dir).collect()
     }
     assert migrate_to_partitioned(spark, flat_dir) is True
-    assert any(d.startswith("day=") for d in os.listdir(flat_dir))
+    assert all(d.startswith("day=") for d in os.listdir(flat_dir))
     after = {
         (r["kit_id"], r["ts"], r["field"]): r["value"]
         for r in spark.read.parquet(flat_dir).drop("day").collect()
@@ -147,42 +146,10 @@ def test_stream_default_is_partitioned_and_migration(spark, tmp_path):
     assert after == before
     # idempotent: a second call is a no-op
     assert migrate_to_partitioned(spark, flat_dir) is False
-    # replay through the auto default -> partitioned merge, still no dupes
+    # replay through the stream -> partitioned merge, still no dupes
     q2 = run_file_stream(spark, str(in_dir), str(tmp_path / "ckpt_f2"), flat_dir)
     q2.awaitTermination(120)
     assert spark.read.parquet(flat_dir).count() == len(before)
-
-
-def test_stream_drives_partitioned_archive(spark, tmp_path):
-    """run_file_stream(partitioned=True) lands the same facts as the flat
-    sink, laid out as day= partitions, and duplicate file delivery stays
-    idempotent through the dynamic-overwrite merge."""
-    import os
-
-    from mysense_spark.streaming.pipeline import run_file_batch, run_file_stream
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    _write_dump(in_dir, "batch1.mqtt", ALL_LINES)
-    out_dir = str(tmp_path / "archive_part")
-    q = run_file_stream(spark, str(in_dir), str(tmp_path / "ckpt"), out_dir, partitioned=True)
-    q.awaitTermination(120)
-
-    assert any(d.startswith("day=") for d in os.listdir(out_dir))
-    streamed = spark.read.parquet(out_dir)
-    batch = run_file_batch(spark, str(in_dir / "batch1.mqtt"))
-    skey = {(r["kit_id"], r["field"]): r["value"] for r in streamed.collect()}
-    bkey = {(r["kit_id"], r["field"]): r["value"] for r in batch.collect()}
-    assert skey == bkey, "partitioned stream result != batch twin"
-
-    # duplicate delivery -> merge keeps the row set unchanged
-    n_before = streamed.count()
-    _write_dump(in_dir, "batch2.mqtt", [V2_PORT2, V2_PORT4])
-    q2 = run_file_stream(
-        spark, str(in_dir), str(tmp_path / "ckpt2"), out_dir, partitioned=True
-    )
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out_dir).count() == n_before
 
 
 def test_partitioned_stream_multiday_late_data(spark, tmp_path):
@@ -198,13 +165,13 @@ def test_partitioned_stream_multiday_late_data(spark, tmp_path):
     day2 = V2_PORT2.replace("2020-11-07", "2020-11-08")
     _write_dump(in_dir, "b1.mqtt", [day2])
     out_dir = str(tmp_path / "arch")
-    q = run_file_stream(spark, str(in_dir), str(tmp_path / "c1"), out_dir, partitioned=True)
+    q = run_file_stream(spark, str(in_dir), str(tmp_path / "c1"), out_dir)
     q.awaitTermination(120)
     assert sorted(d for d in os.listdir(out_dir) if d.startswith("day=")) == ["day=2020-11-08"]
 
     # late batch: the ORIGINAL day-1 record arrives after day-2 data
     _write_dump(in_dir, "b2.mqtt", [V2_PORT2])
-    q2 = run_file_stream(spark, str(in_dir), str(tmp_path / "c2"), out_dir, partitioned=True)
+    q2 = run_file_stream(spark, str(in_dir), str(tmp_path / "c2"), out_dir)
     q2.awaitTermination(120)
     days = sorted(d for d in os.listdir(out_dir) if d.startswith("day="))
     assert days == ["day=2020-11-07", "day=2020-11-08"]
@@ -859,7 +826,7 @@ def test_pipeline_scopes_rocksdb_for_vanilla_sessions(spark, tmp_path):
         src.mkdir()
         (src / "a.mqtt").write_text("\n".join(ALL_LINES))
         q = run_file_stream(
-            spark, str(src), str(tmp_path / "ckpt"), str(tmp_path / "out"), partitioned=False
+            spark, str(src), str(tmp_path / "ckpt"), str(tmp_path / "out")
         )
         q.awaitTermination(120)
         assert spark.conf.get(key, None) is None, "provider conf leaked into session"
