@@ -66,8 +66,6 @@ FIELD_TRANSLATE: dict[str, str] = {
 
 # canonical names that pass through untranslated even though they carry
 # no registry row (position/meta fields the LoRa decoder emits directly).
-# SHARED by translate_field and the pipeline's column-expression twin —
-# one set, so the two implementations cannot drift.
 PASSTHROUGH_FIELDS = frozenset(
     {"geohash", "longitude", "latitude", "lat", "lon", "alt", "time", "event", "value", "version"}
 )

@@ -23,10 +23,12 @@ Port 3 (meta/event): version B (x/10); byte1==0 -> event datagram
   (event = last byte, value = second-to-last); else dust id = byte1&7,
   gps = byte1&8, meteo id = byte1>>4; geolocation 3xL.
 
-Spark integration: `decode_udf` is an Arrow-batched pandas UDF
-(port, base64) -> JSON of {sensor_type: {field: value}}; bit-twiddling
-per datagram is microseconds — the Arrow transfer amortizes across the
-batch, and decode parallelizes per partition at any scale.
+Spark integration: the fact path calls `decode_payload` inside the
+pipeline's typed-row Arrow UDF (`streaming.pipeline.fact_rows`);
+`make_decode_udf` (base64, port) -> JSON of {sensor_type: {field:
+value}} serves the port-3 event stream. Bit-twiddling per datagram is
+microseconds — the Arrow transfer amortizes across the batch, and
+decode parallelizes per partition at any scale.
 """
 
 from __future__ import annotations
@@ -427,7 +429,9 @@ def decode_to_json(payload_b64: str, port: int) -> str | None:
 
 
 def make_decode_udf():
-    """Arrow-batched pandas UDF: (payload_raw, port) -> JSON string."""
+    """Arrow-batched pandas UDF: (payload_raw, port) -> JSON string
+    (the port-3 events_stream reads its meta block with
+    get_json_object)."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 

@@ -1,8 +1,8 @@
 """The MySense ingest pipeline, Spark-first (SURVEY.md §3.1):
 
-  lines -> TTN normalize (S3) -> LoRa decode (S4) -> explode to the long
-  fact format -> field-name translate (P1) -> range validate (P2) ->
-  watermark + dedup (late/duplicate handling) -> upsert sink (K1)
+  lines -> TTN normalize (S3) -> typed decode (S4 + P1 + P2) -> inline
+  to the long fact format -> watermark + dedup (late/duplicate
+  handling) -> upsert sink (K1)
 
 One transform chain serves BATCH (file replay, the reference's .mqtt
 corpora — S2) and STREAMING (`readStream` on a drop directory or a
@@ -10,8 +10,18 @@ Kafka/MQTT bridge). The reference runs the same record path in a Python
 loop one datagram at a time; here every stage is a DataFrame operator.
 
 Scale notes:
-- decode is the only Python stage (Arrow pandas UDF), placed after the
-  envelope parse so its input is just (payload, port).
+- decode is the only Python stage: one Arrow UDF, placed after the
+  envelope parse so its input is just (payload, port). It returns each
+  datagram's fact rows already typed — field name translated
+  (`registry.translate_field`), unit and category looked up, `valid`
+  computed from `VALID_BOUNDS` (`fact_rows`) — and one `F.inline`
+  expands them. Like MySense's datacollector, one pass per datagram
+  decodes, translates and validates: no JSON re-parse of the decode
+  output, and no registry join (a broadcast join costs one Spark job
+  on every trigger).
+- the same UDF's NULL (undecodable payload) is the quarantine's
+  `decode_error` (dead_letter_stream), so one decode decides both the
+  fact rows and the dead letters.
 - the long format makes "new sensor field" a data event — no DDL, no
   schema evolution race (the reference ALTERs MySQL tables mid-stream,
   lib/MyDB.py:256-267).
@@ -21,90 +31,93 @@ Scale notes:
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import DataType
 
-from ..io import values_df
-from ..registry import FIELD_REGISTRY, FIELD_TRANSLATE, PASSTHROUGH_FIELDS, VALID_BOUNDS
-from ..sources.lora import make_decode_udf
+from ..registry import FIELD_REGISTRY, VALID_BOUNDS, translate_field
+from ..sources.lora import decode_payload, make_decode_udf
 from ..sources.ttn import parse_envelopes
 
-# decoded JSON is {sensor_type: {field: value}}. Values parse as strings
-# (port-10 Libelium frames carry a string-valued meta block that a double
-# map would reject wholesale) and are cast to double after the meta block
-# is filtered out — numeric JSON round-trips exactly through the cast.
-_DECODED_SCHEMA = "map<string, map<string, string>>"
+# the decode UDF's return type: one struct per measured field of a
+# datagram, expanded to rows by a single F.inline
+_FACT_ROWS_TYPE = (
+    "array<struct<sensor_type string, field string, value double, "
+    "unit string, category string, valid boolean>>"
+)
 
 
-def _translate_expr(col):
-    """P1 field-name translation as a column expression — the exact
-    column-side mirror of registry.translate_field (MyDatacollector.py:
-    332-349): exact map hit, else normalized lowercase (_pcs->_cnt,
-    2.5->25, 0.3->03, 0.5->05) against the registry / lowercase map,
-    else a 'field_' prefix so unknown names can't silently alias a
-    registered field. Previously this was a lowercase-and-exact-hit-only
-    reimplementation that let 'pm2.5_pcs'-style names through untranslated
-    (skipping the unit join and bounds validation)."""
-    n = F.trim(col)
-    exact = F.lit(None).cast("string")
-    for src, dst in FIELD_TRANSLATE.items():
-        exact = F.when(n == src, F.lit(dst)).otherwise(exact)
-    low = F.lower(n)
-    for pat, rep in ((r"_pcs", "_cnt"), (r"2\.5", "25"), (r"0\.3", "03"), (r"0\.5", "05")):
-        low = F.regexp_replace(low, pat, rep)
-    known = set(FIELD_REGISTRY) | set(PASSTHROUGH_FIELDS)
-    low_hit = F.when(low.isin(*sorted(known)), low)
-    low_map = F.lit(None).cast("string")
-    for src, dst in FIELD_TRANSLATE.items():
-        if src == src.lower():
-            low_map = F.when(low == src, F.lit(dst)).otherwise(low_map)
-    return F.coalesce(exact, low_hit, low_map, F.concat(F.lit("field_"), low))
+def fact_rows(payload_b64: str, port: int) -> list[tuple] | None:
+    """One datagram -> its typed fact rows
+    (sensor_type, field, value, unit, category, valid), or None when the
+    payload does not decode. Applies the registry rules in the same
+    pass: P1 field-name translation (`translate_field`), the unit and
+    category of the field registry (None for an unregistered field) and
+    P2 range validation — `lo <= value <= hi - 1e-9` for a bounded field
+    (None for a missing value; NaN and +-inf fail), True for any other.
+    The port-10 meta block (frame header: serial/wasp_id/seq) is not a
+    measurement and yields no row, so a port-3 datagram decodes to [].
+    Rows come sensor-type then field in sorted order, so when two
+    sensors of one datagram report the same field the stream's dedup
+    keeps the same one on every run."""
+    try:
+        decoded = decode_payload(payload_b64, port)
+        rows = []
+        for sensor_type in sorted(decoded):
+            if sensor_type == "meta":
+                continue
+            fields = decoded[sensor_type]
+            for raw in sorted(fields):
+                v = fields[raw]
+                value = None if v is None else float(v)
+                field = translate_field(raw)
+                unit, _precision, category = FIELD_REGISTRY.get(field, (None, None, None))
+                bounds = VALID_BOUNDS.get(field)
+                if bounds is None:
+                    valid = True
+                elif value is None:
+                    valid = None
+                else:
+                    valid = bounds[0] <= value <= bounds[1] - 1e-9
+                rows.append((sensor_type, field, value, unit, category, valid))
+        return rows
+    except Exception:
+        return None
+
+
+def _fact_rows_udf():
+    """Arrow UDF: (payload_raw, port) -> fact_rows. Arrow arrays in and
+    out with no pandas step: pandas would hand a nullable port over as
+    float64 and, on the way back, turn a NaN value into NULL."""
+    row_type = to_arrow_type(DataType.fromDDL(_FACT_ROWS_TYPE))
+
+    def decode_arrays(payload: pa.Array, port: pa.Array) -> pa.Array:
+        return pa.array(
+            [
+                fact_rows(p, pt) if p is not None and pt is not None else None
+                for p, pt in zip(payload.to_pylist(), port.to_pylist())
+            ],
+            type=row_type,
+        )
+
+    return F.arrow_udf(decode_arrays, _FACT_ROWS_TYPE)
 
 
 def decode_stream(normalized: DataFrame) -> DataFrame:
     """Normalized envelopes -> long fact rows
-    (kit_id, ts, sensor_type, field, value, unit, valid)."""
-    decode_udf = make_decode_udf()
+    (kit_id, serial, ts, ingest_ts, sensor_type, field, value, unit,
+    category, valid)."""
     # ports 2/4/12 (MySense datagrams) and 10 (Libelium WaspMote) all
     # carry measurements; port 3 is meta/event and has its own stream
     # (meta_event_stream) — nothing valid falls through to dead-letter.
-    decoded = normalized.where(F.col("port").isin(2, 4, 10, 12)).withColumn(
-        "decoded", F.from_json(decode_udf(F.col("payload_raw"), F.col("port")), _DECODED_SCHEMA)
-    )
-    long_rows = (
-        decoded.select(
-            F.concat_ws("_", "app_id", "dev_id").alias("kit_id"),
-            F.col("serial"),
-            F.col("event_ts").alias("ts"),
-            F.col("ingest_ts"),
-            F.explode("decoded").alias("sensor_type", "fields"),
-        )
-        # the meta block (port-10 frame header: serial/wasp_id/seq) is not
-        # a measurement; drop it before the numeric cast
-        .where(F.col("sensor_type") != "meta")
-        .select(
-            "kit_id",
-            "serial",
-            "ts",
-            "ingest_ts",
-            "sensor_type",
-            F.explode("fields").alias("raw_field", "value"),
-        )
-        .withColumn("value", F.col("value").cast("double"))
-        .withColumn("field", _translate_expr(F.col("raw_field")))
-        .drop("raw_field")
-    )
-    # registry join: unit + category (broadcast dimension, J1 pattern)
-    units = [(f, u, c) for f, (u, _p, c) in FIELD_REGISTRY.items()]
-    spark = normalized.sparkSession
-    unit_dim = values_df(spark, units, "field string, unit string, category string")
-    enriched = long_rows.join(F.broadcast(unit_dim), "field", "left")
-    # P2 range validation from the bounds registry
-    valid = F.lit(True)
-    for fname, (lo, hi) in VALID_BOUNDS.items():
-        valid = F.when(F.col("field") == fname, F.col("value").between(lo, hi - 1e-9)).otherwise(valid)
-    return enriched.withColumn("valid", valid).select(
-        "kit_id", "serial", "ts", "ingest_ts", "sensor_type", "field", "value", "unit", "category", "valid"
+    return normalized.where(F.col("port").isin(2, 4, 10, 12)).select(
+        F.concat_ws("_", "app_id", "dev_id").alias("kit_id"),
+        "serial",
+        F.col("event_ts").alias("ts"),
+        "ingest_ts",
+        F.inline(_fact_rows_udf()(F.col("payload_raw"), F.col("port"))),
     )
 
 
@@ -114,16 +127,15 @@ def dead_letter_stream(normalized: DataFrame) -> DataFrame:
     dropped, so replay after a decoder fix is possible (the reference
     logs-and-drops; at scale a quarantine table is the recoverable
     version of that)."""
-    decode_udf = make_decode_udf()
     measurement_ports = (2, 3, 4, 10, 12)
+    decoded = _fact_rows_udf()(F.col("payload_raw"), F.col("port"))
     attempted = normalized.withColumn(
-        "decoded_json",
-        F.when(F.col("port").isin(*measurement_ports), decode_udf(F.col("payload_raw"), F.col("port"))),
+        "decoded", F.when(F.col("port").isin(*measurement_ports), decoded)
     )
     return attempted.where(
         F.col("payload_raw").isNull()
         | ~F.col("port").isin(*measurement_ports)
-        | F.col("decoded_json").isNull()
+        | F.col("decoded").isNull()
     ).select(
         F.concat_ws("_", "app_id", "dev_id").alias("kit_id"),
         "port",

@@ -491,6 +491,20 @@ def test_query_cache_hygiene(spark, sf_dir):
     assert len(cache._TRACKED) == 0, "tracked caches not released at query entry"
 
 
+def test_query_memos_do_not_cross_invocations(spark, sf_dir):
+    """The neardup label memo never serves a result to a later query
+    invocation: the registry empties it at every query entry, so a
+    re-run (or dedup_keep_best after neardup_clusters) recomputes."""
+    from mysense_spark.operators import dedup
+    from mysense_spark.queries import spark_queries
+
+    q = spark_queries()
+    q["neardup_clusters"](spark, sf_dir).collect()
+    assert dedup._LABELS_MEMO, "neardup_clusters no longer memoizes its labels"
+    q["pricing_summary"](spark, sf_dir)  # any next entry empties the memo
+    assert not dedup._LABELS_MEMO, "label memo survived a query entry"
+
+
 def test_drain_breaker_mixed_batches_do_not_latch():
     """A steady tiny error rate (say 1 failure per 5k posts per batch)
     must never accumulate across batches and open the breaker — each

@@ -35,3 +35,23 @@ def test_compare_frames_rejects_decimal_vs_float():
     # and the all-float twin still passes (the fix must not over-reject)
     same = pd.DataFrame({"k": [1, 2], "v": [1.5, 2.5]})
     assert compare_frames(same, oracle).ok
+
+
+def test_gate_tool_refuses_a_non_directory_sf_dir(tmp_path):
+    """A query name passed where sf_dir goes (`run_oracle_gate.py
+    ttn_decode`) is a usage error: exit 2 with the usage line, before any
+    Spark session starts, instead of one PATH_NOT_FOUND failure per
+    registered query."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tool = os.path.join(repo, "tools", "run_oracle_gate.py")
+    for arg in ("ttn_decode", str(tmp_path / "missing"), __file__):
+        out = subprocess.run(
+            [sys.executable, tool, arg], capture_output=True, text=True, timeout=120
+        )
+        assert out.returncode == 2, (arg, out.returncode, out.stdout[-500:], out.stderr[-500:])
+        assert "usage: python tools/run_oracle_gate.py" in out.stderr
+        assert "PATH_NOT_FOUND" not in out.stdout and "entry rows" not in out.stdout

@@ -246,6 +246,18 @@ def test_no_python_row_udfs_in_registry(spark, sf_dir):
     assert not offenders, f"row-at-a-time Python UDFs in: {offenders}"
 
 
+def test_ttn_decode_is_one_typed_decode(spark, sf_dir):
+    """The ingest chain decodes each datagram once, straight to typed
+    fact rows: one Arrow Python stage, one from_json (the envelope —
+    the decode output is not re-parsed), and no registry join (the
+    unit/category lookup rides the decode, so no per-micro-batch
+    broadcast job)."""
+    plan = _plan(spark, "ttn_decode", sf_dir)
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert plan.count("from_json(") == 1, plan
+    assert "BroadcastExchange" not in plan and "BroadcastHashJoin" not in plan, plan
+
+
 def test_ngram_jaccard_self_join_is_df_capped(spark, sf_dir):
     """The Jaccard verify tier's one scale hazard is a hot-shingle bucket
     (quadratic OUTPUT — AQE skew-split can't fix an output explosion).

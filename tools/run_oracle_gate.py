@@ -2,7 +2,8 @@
 given SF dir. Usage: python tools/run_oracle_gate.py [sf_dir] [names...]
 Each query is judged by `oracle.check_query` (the check the test suite
 uses). Prints one line per query and a final summary; exits 1 if any
-query fails and 2 if a name is not a registered query."""
+query fails, and 2 if sf_dir is not a directory or a name is not a
+registered query."""
 from __future__ import annotations
 
 import os
@@ -14,8 +15,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
 
+USAGE = "usage: python tools/run_oracle_gate.py [sf_dir] [names...]"
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    if not os.path.isdir(sf_dir):
+        print(f"sf_dir {sf_dir!r} is not a directory\n{USAGE}", file=sys.stderr, flush=True)
+        return 2
     from mysense_spark.oracle import check_query
     from mysense_spark.queries import registry
 
