@@ -227,7 +227,6 @@ def q_caqi_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     subs = {p: piecewise(F.col(p), CAQI_BREAKPOINTS[p], CAQI_CAP) for p in CAQI_BREAKPOINTS}
     mandated_ok = F.col("no2").isNotNull() & F.col("pm10").isNotNull() & F.col("o3").isNotNull()
-    caqi = F.greatest(*subs.values())
     return (
         h.where(mandated_ok)
         .select(

@@ -2483,12 +2483,16 @@ def write_srp_partitioned(
     n_bits: int = _SRP_BITS,
     append: bool = False,
 ) -> None:
-    """The SRP-LSH deployment layout (late r12): the (vec_id, tbl,
-    bucket) signature table written hive-partitioned by (tbl, bucket) —
-    a probe that touches T x (1 + probes) buckets opens only those
-    directories (static PartitionFilter, same plan-contract guarantee
-    as write_ivf_partitioned) instead of scanning the signature
-    stream.
+    """The SRP-LSH deployment layout: the (vec_id, tbl, bucket)
+    signature table partitioned by `tbl` only, with `bucket` a data
+    column sorted within each table's file. A probe that touches
+    T x (1 + probes) buckets opens only the probed tables' directories
+    (static PartitionFilter on tbl) and skips row groups by the parquet
+    min/max stats of the sorted bucket column (pushed DataFilter) —
+    plan-contract-pinned. Bucket is not a partition column because one
+    directory per (tbl, bucket) was slower at every measured size: its
+    O(tables x 2^bits) directory listing dominated the probe
+    (SCALING.md r14/r15).
 
     `append=True` is the property the IVF layouts cannot offer: SRP
     has no trained state, so a new batch's signatures are independent
@@ -2497,55 +2501,35 @@ def write_srp_partitioned(
     niche; an IVF layout would first have to re-validate its codebook
     against the drifted corpus).
 
-    Small-files posture (review catch): signatures repartition by tbl
-    before the write, so each (tbl, bucket) directory gains at most
-    ONE file per append instead of one per upstream task. A long-lived
-    appending stream still accumulates O(batches) files per hot
-    bucket; the compaction paths are periodic
-    `write_srp_partitioned(all_vecs, path)` (overwrite) from the
-    corpus archive — signatures are a pure function of the vectors, so
-    a rebuild is always byte-equivalent to the appends it replaces —
-    or in-place `compact_srp_index`.
-
-    Layout-aware appends (r15): once compact_srp_index(flatten=True)
-    has collapsed the layout to tbl-only partitioning, an append must
-    MATCH it — a hive (tbl, bucket) append into a flat dir would mix
-    partition depths and break the read. Appends detect the on-disk
-    layout and write flat (bucket as a sorted data column) when the
-    dir is flat; the appended files' bucket ranges are wide until the
-    next compaction re-sorts them (correct reads either way — the
-    bucket predicate is a pushed filter on flat layouts), so the
-    streaming sink keeps working across compaction cycles."""
-    sigs = srp_signatures(vecs, n_tables, n_bits).repartition(n_tables, "tbl")
-    mode = "append" if append else "overwrite"
-    if append and _srp_layout(path) == "flat":
-        (
-            sigs.sortWithinPartitions("bucket", "vec_id")
-            .write.mode("append")
-            .partitionBy("tbl")
-            .parquet(path)
-        )
-    else:
-        sigs.write.mode(mode).partitionBy("tbl", "bucket").parquet(path)
+    Small-files posture: signatures repartition by tbl before the
+    write, so each tbl directory gains at most ONE file per append. A
+    long-lived appending stream still accumulates O(batches) files per
+    table, each spanning the full bucket range until compaction
+    re-sorts them (reads are correct either way). The compaction paths
+    are periodic `write_srp_partitioned(all_vecs, path)` (overwrite)
+    from the corpus archive — signatures are a pure function of the
+    vectors, so a rebuild is always row-equivalent to the appends it
+    replaces — or in-place `compact_srp_index`."""
+    _write_srp_sigs(
+        srp_signatures(vecs, n_tables, n_bits),
+        path,
+        n_tables,
+        "append" if append else "overwrite",
+    )
 
 
-def _srp_layout(path: str) -> str | None:
-    """Sniff an SRP index dir's partitioning: 'hive' ((tbl, bucket)
-    directories), 'flat' (tbl-only, bucket as a data column — the
-    compact_srp_index(flatten=True) shape), or None (no layout yet)."""
-    import os
-
-    if not os.path.isdir(path):
-        return None
-    for d in os.listdir(path):
-        if d.startswith("tbl="):
-            sub = os.path.join(path, d)
-            try:
-                entries = os.listdir(sub)
-            except OSError:
-                continue
-            return "hive" if any(x.startswith("bucket=") for x in entries) else "flat"
-    return None
+def _write_srp_sigs(sigs: DataFrame, path: str, n_tables: int, mode: str) -> None:
+    """One writer task per table, bucket-sorted, partitioned by tbl.
+    The sort leads with tbl so it already satisfies the partitioned
+    writer's required ordering (a sort that does not would be replaced
+    by the writer's own sort on tbl alone, losing the bucket order)."""
+    (
+        sigs.repartition(n_tables, "tbl")
+        .sortWithinPartitions("tbl", "bucket", "vec_id")
+        .write.mode(mode)
+        .partitionBy("tbl")
+        .parquet(path)
+    )
 
 
 def run_srp_index_stream(
@@ -2559,7 +2543,7 @@ def run_srp_index_stream(
     """The streaming composition the SRP tier exists for: a Structured
     Streaming query over a JSONL vector drop directory whose sink
     foreachBatch-appends each micro-batch's signatures into the
-    (tbl, bucket) layout — incremental ANN index maintenance with NO
+    tbl-partitioned layout — incremental ANN index maintenance with NO
     training state to refresh (the IVF tiers would re-validate a
     codebook here). availableNow trigger so drains/replays stop.
 
@@ -2608,91 +2592,77 @@ def run_srp_index_stream(
     )
 
 
-def compact_srp_index(
-    spark: SparkSession,
-    index_path: str,
-    n_tables: int = _SRP_TABLES,
-    flatten: bool = True,
-) -> None:
-    """Compact an SRP signature layout in place (r15, VERDICT #4 — the
-    named follow-up to the measured small-files economics). Two
-    distinct costs get fixed:
+def compact_srp_index(spark: SparkSession, index_path: str) -> None:
+    """Compact an SRP signature layout in place. A long-lived
+    run_srp_index_stream leaves O(appends) files per tbl directory,
+    each spanning the full bucket range; compaction re-reads the full
+    signature set, drops at-least-once duplicate rows (distinct — the
+    compacted layout equals the pure rebuild) and rewrites ONE
+    bucket-sorted file per table, so the bucket predicate skips row
+    groups again. Three steps, and the index directory itself is never
+    renamed:
 
-      - O(appends) files per hot (tbl, bucket) directory from a
-        long-lived run_srp_index_stream: the full signature set is
-        re-read, at-least-once duplicate rows dropped (distinct — the
-        compacted layout equals the pure rebuild, which the append
-        story already guarantees is byte-equivalent), and rewritten
-        with ONE writer task per table.
-      - `flatten=True` (default) additionally collapses the 2 048
-        tiny (tbl, bucket) directories into n_tables BUCKET-SORTED
-        files partitioned by tbl only. Directory listing — the
-        measured dominant cost of the hive layout at 200k vectors
-        (SCALING.md r14: 21.8 s indexed vs 9.2 s inline, almost all
-        listing/open overhead on 2 048 partitions) — drops from
-        O(tables x 2^bits) to O(tables); the bucket predicate still
-        prunes, now via parquet row-group min/max stats on the sorted
-        bucket column instead of directory names. At small N a table's
-        file is a single row group (the probe reads a few extra
-        thousand 24-byte rows); at production N the sort keeps
-        row-group skipping as selective as the directory prune was.
-        read_srp_buckets is layout-agnostic (its predicate names the
-        columns, wherever they live), pinned by the plan-contract
-        test.
+      1. list the current data files;
+      2. stage the distinct signatures, repartitioned by tbl and
+         sorted, in the fixed sibling `{index_path}.compact` (a stage
+         left behind by an interrupted run is discarded first);
+      3. move the staged files into the tbl= dirs, then delete the
+         listed files.
 
-    Single-writer discipline, same as the append sink: run compaction
-    in the maintenance window, not concurrently with appends. The swap
-    is two renames (old out, stage in); a crash between them leaves no
-    index dir at the path, which _ensure_index treats as a plain cache
-    miss and rebuilds — never a half-compacted layout served as truth.
-    Marker files (_INDEX_READY/_INDEX_APPENDED) carry across the swap
-    unchanged: compaction is a pure function of the layout contents,
-    so whatever coherence state held before holds after."""
+    No manifest is needed: an interruption at any point leaves a
+    SUPERSET of the signature rows at the path — the old files before
+    and during the moves, the compacted files during the deletes. The
+    layout already tolerates duplicate rows, because at-least-once
+    appends create them and the search pools distinct cand_ids, so
+    every interrupted state serves the same search results and a
+    re-run compacts it to one file per table. Marker files
+    (_INDEX_READY/_INDEX_APPENDED) are left untouched: compaction is a
+    pure function of the layout contents, so whatever coherence state
+    held before holds after. Run it in the maintenance window, like
+    any single-writer maintenance of the layout: an append that lands
+    mid-compaction keeps its rows but may survive as an extra file."""
     import os
     import shutil
 
-    # Normalize bucket to the signature kernel's BIGINT before writing
-    # it as a DATA column: reading the HIVE layout re-infers the bucket
-    # PARTITION value as int32, so a flatten that wrote it as-read
-    # would mix int32 files with the int64 files later flat APPENDS
-    # write (srp_signatures emits bigint) — a read-time
-    # PARQUET_COLUMN_DATA_TYPE_MISMATCH that only surfaces when schema
-    # inference happens to pick the other file first (caught by the
-    # stream -> compact -> stream pytest failing order-dependently).
-    sigs = (
-        spark.read.parquet(index_path)
-        .select(
-            "vec_id",
-            F.col("tbl").cast("long").alias("tbl"),
-            F.col("bucket").cast("long").alias("bucket"),
-        )
-        .distinct()
-    )
-    stage = f"{index_path}.compact.{os.getpid()}"
+    stage = f"{index_path}.compact"
     shutil.rmtree(stage, ignore_errors=True)
-    writer = sigs.repartition(n_tables, "tbl")
-    if flatten:
-        writer = writer.sortWithinPartitions("bucket", "vec_id")
-        writer.write.mode("overwrite").partitionBy("tbl").parquet(stage)
-    else:
-        writer.write.mode("overwrite").partitionBy("tbl", "bucket").parquet(stage)
-    for mk in ("_INDEX_READY", "_INDEX_APPENDED"):
-        src = os.path.join(index_path, mk)
-        if os.path.exists(src):
-            shutil.copy2(src, os.path.join(stage, mk))
-    old = f"{index_path}.old.{os.getpid()}"
-    os.rename(index_path, old)
-    os.rename(stage, index_path)
-    shutil.rmtree(old, ignore_errors=True)
+    listed = _srp_data_files(index_path)
+    sigs = spark.read.parquet(index_path).select("vec_id", "tbl", "bucket").distinct()
+    n_tables = len({os.path.dirname(f) for f in listed})
+    _write_srp_sigs(sigs, stage, n_tables, "overwrite")
+    for src in _srp_data_files(stage):
+        dst = os.path.join(index_path, os.path.relpath(src, stage))
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.rename(src, dst)
+    for f in listed:
+        os.remove(f)
+    shutil.rmtree(stage, ignore_errors=True)
+
+
+def _srp_data_files(root: str) -> list[str]:
+    """Every file inside the tbl= dirs of an SRP layout (parquet parts
+    and their checksum siblings)."""
+    import os
+
+    return [
+        os.path.join(root, d, f)
+        for d in sorted(os.listdir(root))
+        if d.startswith("tbl=")
+        for f in sorted(os.listdir(os.path.join(root, d)))
+    ]
 
 
 def read_srp_buckets(
     spark: SparkSession, path: str, probes: list[tuple[int, int]]
 ) -> DataFrame:
-    """Read ONLY the probed (tbl, bucket) directories from an
-    SRP-partitioned layout — the predicate is on the partition columns,
-    so it prunes at plan time (PartitionFilters in the scan node; other
-    buckets' files are never listed).
+    """Read ONLY the probed (tbl, bucket) rows of an SRP layout. The
+    predicate prunes at plan time: tbl is the partition column, so
+    other tables' directories are never opened (PartitionFilters in
+    the scan node), and the bucket IN-list is pushed to parquet
+    (DataFilters), which skips row groups whose min/max bucket stats
+    miss every probe. Nothing is listed outside Spark's own reader, so
+    the search path runs on any Hadoop filesystem, object stores
+    included.
 
     The predicate groups probes per table — `tbl = t AND bucket IN
     (...)` OR'd over the n_tables tables — instead of one OR clause per
@@ -2700,22 +2670,7 @@ def read_srp_buckets(
     (1 + bits) at radius 1) built the old pairwise chain hundreds of
     clauses deep and overflowed Catalyst's column-conversion stack (r13
     composition-test catch); the grouped form is n_tables shallow terms
-    and In() still participates in partition pruning.
-
-    Listing (r15 optimization pass, guide §6 'file listing'): on the
-    HIVE layout the read enumerates the probed (tbl, bucket)
-    directories EXPLICITLY (basePath-anchored, existence-checked with
-    one cheap os.listdir sweep) instead of handing Spark the layout
-    root — InMemoryFileIndex otherwise lists all tables x 2^bits
-    directories at plan time just to throw most of them away, and that
-    driver-side listing was the measured dominant cost of the persisted
-    SRP searches (SCALING.md r14/r15). The predicate still applies on
-    top, so the result is identical row-for-row and the scan keeps its
-    static PartitionFilters (plan-contract-pinned). Flat layouts (and
-    the rare probe list whose directories all miss) keep the
-    whole-layout read."""
-    import os
-
+    and In() still participates in partition pruning."""
     by_tbl: dict[int, set[int]] = {}
     for t, bkt in probes:
         by_tbl.setdefault(int(t), set()).add(int(bkt))
@@ -2723,39 +2678,13 @@ def read_srp_buckets(
     for t in sorted(by_tbl):
         clause = (F.col("tbl") == t) & F.col("bucket").isin(sorted(by_tbl[t]))
         pred = clause if pred is None else (pred | clause)
-    if pred is not None and _srp_layout(path) == "hive":
-        on_disk: dict[int, set[int]] = {}
-        for d in os.listdir(path):
-            if d.startswith("tbl="):
-                try:
-                    t = int(d[4:])
-                except ValueError:
-                    continue
-                buckets = on_disk.setdefault(t, set())
-                for b in os.listdir(os.path.join(path, d)):
-                    if b.startswith("bucket="):
-                        try:
-                            buckets.add(int(b[7:]))
-                        except ValueError:
-                            pass
-        dirs = [
-            f"{path}/tbl={t}/bucket={b}"
-            for t in sorted(by_tbl)
-            for b in sorted(by_tbl[t] & on_disk.get(t, set()))
-        ]
-        if dirs:
-            return (
-                spark.read.option("basePath", path).parquet(*dirs).where(pred)
-            )
-        # every probed directory is empty on disk: no candidates — keep
-        # the whole-layout read purely to inherit the schema
     df = spark.read.parquet(path)
     return df.where(pred) if pred is not None else df.limit(0)
 
 
 # --- persisted-index SRP search (r14) ----------------------------------------
 
-_SRP_INDEX_VERSION = 1
+_SRP_INDEX_VERSION = 2  # 2: tbl-partitioned, bucket-sorted layout
 
 
 def srp_index_path(sf_dir: str) -> str:
@@ -2767,7 +2696,7 @@ def srp_index_path(sf_dir: str) -> str:
 def ensure_srp_index(spark: SparkSession, sf_dir: str) -> str:
     """The SRP half of the persisted lifecycle (the training-free twin
     of ensure_ivfadc_index): ONE signature pass over the corpus written
-    into the (tbl, bucket) hive layout. There is no codebook to
+    into the tbl-partitioned layout. There is no codebook to
     persist — signatures are a pure per-row function — which is exactly
     why this index also supports APPEND maintenance
     (write_srp_partitioned(append=True) / run_srp_index_stream) where
@@ -2788,14 +2717,13 @@ def ann_srp_search_indexed(
     n_probes: int = _SRP_PROBES,
     top_k: int = 5,
 ) -> DataFrame:
-    """SRP-LSH search against the on-disk (tbl, bucket) layout — the
+    """SRP-LSH search against the on-disk signature layout — the
     deployment plan: only the QUERIES are hashed at search time (5 rows
     through the signature kernel); their multi-probe list is collected
     (bounded: queries x tables x (1 + n_bits x radius) pairs) and
-    becomes the static per-table partition predicate of
-    read_srp_buckets, so the corpus-side work is listing/scanning the
-    probed bucket directories only — the signature STREAM is never
-    scanned. Candidates pool distinct vec_ids (duplicate rows from
+    becomes the static per-table predicate of read_srp_buckets, so the
+    corpus-side work is scanning the probed tables' files, row groups
+    skipped by bucket stats — the signature STREAM is never scanned. Candidates pool distinct vec_ids (duplicate rows from
     at-least-once appends are harmless by construction); the fenced
     exact re-rank touches full-precision vectors for the pool only.
     Result-identical to ann_srp_search at the same shape
@@ -2819,8 +2747,9 @@ def q_ann_srp_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure the signature index exists on disk (first run per corpus
     hashes and writes; every later run skips straight to the search),
     then search by READING it: query-side hashing only, static
-    per-table bucket predicates (PartitionFilters — the plan-contract
-    guarantee of read_srp_buckets), fenced exact re-rank. The DuckDB
+    per-table bucket predicates (a tbl PartitionFilter plus a pushed
+    bucket DataFilter — the plan-contract guarantee of
+    read_srp_buckets), fenced exact re-rank. The DuckDB
     oracle is verbatim SQL_ANN_SRP — the layout is a pure function of
     the corpus (md5-derived hyperplanes, integer grid signs), so the
     oracle grades the math while the Spark plan carries the
@@ -2883,9 +2812,8 @@ SQL_ANN_SRP_INCREMENTAL = SQL_ANN_SRP
 def ensure_srp_index_compacted(spark: SparkSession, sf_dir: str) -> str:
     """The COMPACTED lifecycle (r15): built exactly like the
     incremental layout — two disjoint epoch appends, the nightly-crawl
-    shape — then closed out by compact_srp_index (flatten=True): the
-    2 048-directory hive layout becomes n_tables bucket-sorted files.
-    Distinct cache key from both sibling lifecycles so the three graded
+    shape — then closed out by compact_srp_index: the two appends'
+    files per table become one bucket-sorted file per table. Distinct cache key from both sibling lifecycles so the three graded
     layouts can never share (and thus mask) each other."""
 
     def build(d: str) -> None:
@@ -2906,14 +2834,13 @@ def ensure_srp_index_compacted(spark: SparkSession, sf_dir: str) -> str:
 
 def q_ann_srp_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graded entry: SRP-LSH search over the COMPACTED index — appends
-    closed out into the flattened tbl-partitioned, bucket-sorted
-    layout (compact_srp_index), then searched exactly like
+    closed out into one bucket-sorted file per table
+    (compact_srp_index), then searched exactly like
     q_ann_srp_persisted. The DuckDB oracle is verbatim SQL_ANN_SRP:
     compaction, like append maintenance, must be INVISIBLE to search
     results — the driver hash gate enforces that the maintenance move
     that fixes the measured small-files economics (SCALING.md r15)
-    changes the plan shape (partition prune on tbl + row-group stats
-    prune on bucket) and nothing else."""
+    changes the file count and nothing else."""
     vecs = _vectors(spark, sf_dir)
     idx = ensure_srp_index_compacted(spark, sf_dir)
     return ann_srp_search_indexed(spark, vecs, idx)
@@ -4133,7 +4060,7 @@ def q_semdedup_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine as q_semdedup, centroids chosen by the modulo rule so K grows
     with N and per-cluster quadratic work stays bounded by
     _SEM_TARGET_CLUSTER². The scaling sweep runs THIS variant to show
-    the growth exponent flattening toward linear (SCALING.md);
+    the growth exponent falling toward linear (SCALING.md);
     q_semdedup keeps the frozen K=8 fixture so its graded output stays
     stable across rounds."""
     vecs = _vectors(spark, sf_dir)

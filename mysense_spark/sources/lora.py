@@ -23,18 +23,16 @@ Port 3 (meta/event): version B (x/10); byte1==0 -> event datagram
   (event = last byte, value = second-to-last); else dust id = byte1&7,
   gps = byte1&8, meteo id = byte1>>4; geolocation 3xL.
 
-Spark integration: the fact path calls `decode_payload` inside the
-pipeline's typed-row Arrow UDF (`streaming.pipeline.fact_rows`);
-`make_decode_udf` (base64, port) -> JSON of {sensor_type: {field:
-value}} serves the port-3 event stream. Bit-twiddling per datagram is
-microseconds — the Arrow transfer amortizes across the batch, and
-decode parallelizes per partition at any scale.
+Spark integration: the pipeline calls `decode_payload` inside its
+typed Arrow UDFs — `streaming.pipeline.fact_rows` for the measurement
+ports, `streaming.pipeline.event_meta` for the port-3 event stream. Bit-
+twiddling per datagram is microseconds — the Arrow transfer amortizes
+across the batch, and decode parallelizes per partition at any scale.
 """
 
 from __future__ import annotations
 
 import base64
-import json
 
 DUST_TYPES = ["unknown", "PPD42NS", "SDS011", "PMS7003", "SPS30", "unknown", "unknown"]
 METEO_TYPES = ["unknown", "DHT11", "SHT85", "BME280", "BME680", "SHT31"]
@@ -419,36 +417,3 @@ def decode_payload(payload_b64: str, port: int) -> dict:
     if port == 12:
         return decode_port_12(raw)
     raise ValueError(f"unsupported LoRa port {port}")
-
-
-def decode_to_json(payload_b64: str, port: int) -> str | None:
-    try:
-        return json.dumps(decode_payload(payload_b64, port), sort_keys=True)
-    except Exception:
-        return None
-
-
-def make_decode_udf():
-    """Arrow-batched pandas UDF: (payload_raw, port) -> JSON string
-    (the port-3 events_stream reads its meta block with
-    get_json_object)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    # no type hints: `from __future__ import annotations` stringifies them,
-    # which the pandas_udf hint parser rejects
-    def decode_series(payload, port):
-        # pd.notna, not `is not None`: Arrow hands a nullable int port
-        # column to pandas as float64, so a missing port arrives as NaN —
-        # `NaN is not None` is True and int(NaN) would crash the whole
-        # batch inside the very quarantine path built for malformed
-        # envelopes (Spark evaluates Python UDFs unconditionally, even
-        # under F.when)
-        return pd.Series(
-            [
-                decode_to_json(p, int(pt)) if p is not None and pd.notna(pt) else None
-                for p, pt in zip(payload, port)
-            ]
-        )
-
-    return pandas_udf(decode_series, "string")

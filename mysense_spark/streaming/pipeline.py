@@ -38,7 +38,7 @@ from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import DataType
 
 from ..registry import FIELD_REGISTRY, VALID_BOUNDS, translate_field
-from ..sources.lora import decode_payload, make_decode_udf
+from ..sources.lora import decode_payload
 from ..sources.ttn import parse_envelopes
 
 # the decode UDF's return type: one struct per measured field of a
@@ -47,6 +47,8 @@ _FACT_ROWS_TYPE = (
     "array<struct<sensor_type string, field string, value double, "
     "unit string, category string, valid boolean>>"
 )
+# the port-3 event UDF's return type: the datagram's meta block
+_EVENT_TYPE = "struct<version double, event int, event_value int, dust string, meteo string>"
 
 
 def fact_rows(payload_b64: str, port: int) -> list[tuple] | None:
@@ -87,22 +89,45 @@ def fact_rows(payload_b64: str, port: int) -> list[tuple] | None:
         return None
 
 
-def _fact_rows_udf():
-    """Arrow UDF: (payload_raw, port) -> fact_rows. Arrow arrays in and
-    out with no pandas step: pandas would hand a nullable port over as
+def event_meta(payload_b64: str, port: int) -> tuple | None:
+    """A port-3 datagram -> its meta block as (version, event,
+    event_value, dust, meteo), None for a key the datagram does not
+    carry; None when the payload does not decode."""
+    try:
+        meta = decode_payload(payload_b64, port)["meta"]
+        return (
+            meta["version"],
+            meta.get("event"),
+            meta.get("value"),
+            meta.get("dust"),
+            meta.get("meteo"),
+        )
+    except Exception:
+        return None
+
+
+def _decode_udf(row_fn, ddl: str):
+    """Arrow UDF: (payload_raw, port) -> row_fn(payload, port) typed as
+    `ddl`, NULL for a NULL payload or port. Arrow arrays in and out
+    with no pandas step: pandas would hand a nullable port over as
     float64 and, on the way back, turn a NaN value into NULL."""
-    row_type = to_arrow_type(DataType.fromDDL(_FACT_ROWS_TYPE))
+    arrow_type = to_arrow_type(DataType.fromDDL(ddl))
 
     def decode_arrays(payload: pa.Array, port: pa.Array) -> pa.Array:
         return pa.array(
             [
-                fact_rows(p, pt) if p is not None and pt is not None else None
+                row_fn(p, pt) if p is not None and pt is not None else None
                 for p, pt in zip(payload.to_pylist(), port.to_pylist())
             ],
-            type=row_type,
+            type=arrow_type,
         )
 
-    return F.arrow_udf(decode_arrays, _FACT_ROWS_TYPE)
+    return F.arrow_udf(decode_arrays, ddl)
+
+
+def _fact_rows_udf():
+    """Arrow UDF: (payload_raw, port) -> fact_rows."""
+    return _decode_udf(fact_rows, _FACT_ROWS_TYPE)
 
 
 def decode_stream(normalized: DataFrame) -> DataFrame:
@@ -185,21 +210,15 @@ def all_dead_letters(lines: DataFrame) -> DataFrame:
 
 
 def events_stream(normalized: DataFrame) -> DataFrame:
-    """Port-3 meta/event side output (SURVEY §2.11: registry mutations)."""
-    decode_udf = make_decode_udf()
-    return (
-        normalized.where(F.col("port") == 3)
-        .withColumn("decoded_json", decode_udf(F.col("payload_raw"), F.col("port")))
-        .select(
-            F.concat_ws("_", "app_id", "dev_id").alias("kit_id"),
-            F.col("event_ts").alias("ts"),
-            F.get_json_object("decoded_json", "$.meta.version").cast("double").alias("version"),
-            F.get_json_object("decoded_json", "$.meta.event").cast("int").alias("event"),
-            F.get_json_object("decoded_json", "$.meta.value").cast("int").alias("event_value"),
-            F.get_json_object("decoded_json", "$.meta.dust").alias("dust"),
-            F.get_json_object("decoded_json", "$.meta.meteo").alias("meteo"),
-        )
-    )
+    """Port-3 meta/event side output (SURVEY §2.11: registry mutations):
+    (kit_id, ts, version, event, event_value, dust, meteo), all five
+    meta columns NULL for a payload that does not decode."""
+    meta = _decode_udf(event_meta, _EVENT_TYPE)(F.col("payload_raw"), F.col("port"))
+    return normalized.where(F.col("port") == 3).select(
+        F.concat_ws("_", "app_id", "dev_id").alias("kit_id"),
+        F.col("event_ts").alias("ts"),
+        meta.alias("meta"),
+    ).select("kit_id", "ts", "meta.*")
 
 
 def run_file_batch(spark, path: str) -> DataFrame:

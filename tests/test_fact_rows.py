@@ -1,8 +1,9 @@
 """The typed decode's per-datagram row builder (`pipeline.fact_rows`),
 tested without Spark: P1 field-name translation, the registry's unit and
 category, P2 range validation, the meta block and the undecodable-payload
-NULL that the quarantine keys on. The last test checks that the decode
-UDF carries the builder's non-finite values through Spark unchanged."""
+NULL that the quarantine keys on, and the port-3 `event_meta` row. The
+last test checks that the decode UDF carries the builder's non-finite
+values through Spark unchanged."""
 
 from __future__ import annotations
 
@@ -109,6 +110,12 @@ def test_meta_block_dropped():
 def test_port3_is_empty_not_none():
     raw = base64.b64encode(bytes([5, 0, 90, 14])).decode()
     assert fact_rows(raw, 3) == []
+
+
+def test_event_meta_of_port3():
+    raw = base64.b64encode(bytes([5, 0, 90, 14])).decode()
+    assert pipeline.event_meta(raw, 3) == (0.5, 14, 90, None, None)
+    assert pipeline.event_meta(base64.b64encode(bytes([5])).decode(), 3) is None
 
 
 @pytest.mark.parametrize(

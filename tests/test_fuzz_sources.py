@@ -1077,15 +1077,15 @@ def test_libelium_rules_mutation_battery():
 
 def test_lora_port_10_12_udf_surface_never_throws(spark):
     """The pipeline surface for the two rules engines: a batch of
-    valid + mutated port-10/12 payloads through the Arrow decode UDF
-    must produce JSON or NULL per row — the quarantine contract — and
-    valid frames must decode (non-null)."""
+    valid + mutated port-10/12 payloads through the pipeline's Arrow
+    decode UDF must produce a list of fact rows or NULL per row — the
+    quarantine contract — and valid frames must decode (non-null)."""
     import base64
     import random
 
     from pyspark.sql import functions as F
 
-    from mysense_spark.sources.lora import make_decode_udf
+    from mysense_spark.streaming.pipeline import _fact_rows_udf
 
     rng = random.Random(0xDEC0DE)
     rows = []
@@ -1099,12 +1099,13 @@ def test_lora_port_10_12_udf_surface_never_throws(spark):
         rows.append((i * 4 + 2, base64.b64encode(bytes(m12[: rng.randrange(1, len(m12))])).decode(), 12, False))
         rows.append((i * 4 + 3, "!!!not-base64!!!", 10, False))
     df = spark.createDataFrame(rows, "id long, payload string, port int, valid boolean")
-    udf = make_decode_udf()
-    out = df.select("id", "valid", udf("payload", "port").alias("js")).collect()
+    udf = _fact_rows_udf()
+    out = df.select("id", "valid", udf("payload", "port").alias("rows")).collect()
     assert len(out) == 200
     for r in out:
+        assert r["rows"] is None or isinstance(r["rows"], list), r
         if r["valid"]:
-            assert r["js"] is not None and r["js"].startswith("{"), r
+            assert r["rows"] is not None, r
 
 
 def test_station_csv_structural_battery(spark, tmp_path):

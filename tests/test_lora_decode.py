@@ -143,21 +143,21 @@ def test_decode_port12_time_field_swallowed_but_frame_aligned():
 
 
 def test_decode_udf_nan_port_quarantined(spark):
-    """Arrow hands a nullable int port to pandas as float64 NaN; the
-    decode UDF must quarantine such rows (NULL JSON), not crash the
-    batch with int(NaN) — exercised through a real null-port row, the
-    exact shape a V3 envelope missing f_port produces."""
+    """A null port must quarantine its row (NULL fact rows), not
+    crash the batch — exercised through a real null-port row, the
+    exact shape a V3 envelope missing f_port produces. (A pandas UDF
+    would see that port as float64 NaN.)"""
     from pyspark.sql import functions as F
 
-    from mysense_spark.sources.lora import make_decode_udf
+    from mysense_spark.streaming.pipeline import _fact_rows_udf
 
     df = spark.createDataFrame(
         [("hQAAAJsArgF4A3oD+gEOAJw=", 2), ("hQAAAJsArgF4A3oD+gEOAJw=", None)],
         "payload_raw string, port int",
     )
-    out = df.select(make_decode_udf()(F.col("payload_raw"), F.col("port")).alias("j")).collect()
-    assert out[0]["j"] is not None  # valid port decodes
-    assert out[1]["j"] is None  # null/NaN port quarantined, no crash
+    out = df.select(_fact_rows_udf()(F.col("payload_raw"), F.col("port")).alias("j")).collect()
+    assert out[0]["j"]  # valid port decodes to fact rows
+    assert out[1]["j"] is None  # null port quarantined, no crash
 
 
 def test_decode_port10_structural():

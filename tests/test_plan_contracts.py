@@ -381,10 +381,10 @@ def test_ivf_partitioned_layout_prunes_cells(spark, sf_dir, tmp_path):
 
 
 def test_srp_partitioned_layout_prunes_and_appends(spark, sf_dir, tmp_path):
-    """The SRP bucket layout (write_srp_partitioned, late r12): (a) a
-    probed read is a PARTITION-PRUNED scan — the (tbl, bucket)
-    predicate is a static PartitionFilter and strictly fewer files are
-    read than a full scan; (b) the layout-only guarantee: the pruned
+    """The SRP signature layout (write_srp_partitioned): (a) a probed
+    read is a PRUNED scan — tbl is a static PartitionFilter, the bucket
+    predicate is pushed to parquet as a DataFilter, and strictly fewer
+    files are read than a full scan; (b) the layout-only guarantee: the pruned
     read equals the logical slice of the signature stream; (c) the
     INCREMENTAL property the layout exists for — appending a new
     batch's signatures leaves the first batch's files untouched (SRP
@@ -415,7 +415,9 @@ def test_srp_partitioned_layout_prunes_and_appends(spark, sf_dir, tmp_path):
     probed = read_srp_buckets(spark, path, probes)
     plan = probed._jdf.queryExecution().executedPlan().toString()
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "tbl" in m.group(1) and "bucket" in m.group(1), plan[:600]
+    assert m and "tbl" in m.group(1), plan[:600]
+    m = re.search(r"DataFilters: \[([^\]]*)", plan)
+    assert m and "bucket" in m.group(1), plan[:600]
     n_probed = probed.select(F.input_file_name()).distinct().count()
     n_full = spark.read.parquet(path).select(F.input_file_name()).distinct().count()
     assert 0 < n_probed < n_full, (n_probed, n_full)
@@ -609,7 +611,8 @@ def test_srp_persisted_search_reads_not_rehashes(spark, sf_dir, tmp_path, monkey
     equals the inline ann_srp grading (the layout is a pure function of
     the corpus), the warm path never rewrites the layout (the corpus
     signature kernel is poisoned — only the 5-row QUERY side may hash),
-    and the bucket scan carries static (tbl, bucket) PartitionFilters."""
+    and the bucket scan carries a static tbl PartitionFilter plus a
+    pushed bucket DataFilter."""
     import re
 
     from pyspark.sql import functions as F
@@ -640,7 +643,9 @@ def test_srp_persisted_search_reads_not_rehashes(spark, sf_dir, tmp_path, monkey
 
     plan = warm_df._jdf.queryExecution().executedPlan().toString()
     filters = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert any("tbl" in f and "bucket" in f for f in filters), plan[:800]
+    assert any("tbl" in f for f in filters), plan[:800]
+    pushed = re.findall(r"DataFilters: \[([^\]]*)", plan)
+    assert any("bucket" in f for f in pushed), plan[:800]
 
 
 def test_sq8_persisted_search_reads_not_requantizes(spark, sf_dir, tmp_path, monkeypatch):
@@ -815,20 +820,15 @@ def test_ensure_index_stale_sweep_uses_tree_mtime(tmp_path):
 
 
 def test_srp_compacted_layout_prunes_and_matches(spark, sf_dir, tmp_path, monkeypatch):
-    """compact_srp_index (r15): (a) the compacted flattened layout has
-    exactly ONE file per tbl directory (the small-files fix is real);
-    (b) the graded search over it equals the inline ann_srp grading
-    (compaction is invisible to results); (c) pruning SURVIVES the
-    layout change — the scan carries a tbl PartitionFilter and the
-    bucket predicate is pushed to parquet (row-group stats prune on
-    the sorted bucket column replaces the directory prune); (d) a
-    multi-append hive layout compacted with flatten=False coalesces
-    each (tbl, bucket) directory to one file; (e) markers carry across
-    the swap."""
+    """compact_srp_index: (a) the compacted layout has exactly ONE file
+    per tbl directory (the small-files fix is real); (b) the graded
+    search over it equals the inline ann_srp grading (compaction is
+    invisible to results); (c) pruning survives — the scan carries a
+    tbl PartitionFilter and the bucket predicate is pushed to parquet
+    (row-group stats prune on the sorted bucket column); (d) compacting
+    in place leaves the marker files untouched."""
     import os
     import re
-
-    from pyspark.sql import functions as F
 
     from mysense_spark.operators import similarity as S
 
@@ -841,11 +841,14 @@ def test_srp_compacted_layout_prunes_and_matches(spark, sf_dir, tmp_path, monkey
     inline = S.q_ann_srp(spark, sf_dir).collect()
     assert rows == inline and len(rows) > 0
 
-    tbl_dirs = [d for d in os.listdir(idx) if d.startswith("tbl=")]
-    assert len(tbl_dirs) == S._SRP_TABLES
-    for d in tbl_dirs:
-        files = [f for f in os.listdir(os.path.join(idx, d)) if f.endswith(".parquet")]
-        assert len(files) == 1, (d, files)
+    def one_file_per_tbl():
+        tbl_dirs = [d for d in os.listdir(idx) if d.startswith("tbl=")]
+        assert len(tbl_dirs) == S._SRP_TABLES
+        for d in tbl_dirs:
+            files = [f for f in os.listdir(os.path.join(idx, d)) if f.endswith(".parquet")]
+            assert len(files) == 1, (d, files)
+
+    one_file_per_tbl()
     assert os.path.exists(os.path.join(idx, "_INDEX_READY"))
 
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -854,25 +857,107 @@ def test_srp_compacted_layout_prunes_and_matches(spark, sf_dir, tmp_path, monkey
     pushed = re.findall(r"DataFilters: \[([^\]]*)", plan)
     assert any("bucket" in f for f in pushed), plan[:800]
 
-    # flatten=False: coalesce files inside the hive layout
-    hive = str(tmp_path / "srp_hive")
+    # (d) re-compact in place: both markers keep their inode, mtime and
+    # bytes; the layout and the search results stay the same
+    with open(os.path.join(idx, "_INDEX_APPENDED"), "w") as f:
+        f.write("appended\n")
+
+    def marker_state():
+        state = {}
+        for mk in ("_INDEX_READY", "_INDEX_APPENDED"):
+            st = os.stat(os.path.join(idx, mk))
+            with open(os.path.join(idx, mk)) as f:
+                state[mk] = (st.st_ino, st.st_mtime_ns, f.read())
+        return state
+
+    before = marker_state()
+    S.compact_srp_index(spark, idx)
+    assert marker_state() == before
+    one_file_per_tbl()
     vecs = S._vectors(spark, sf_dir)
-    for i in range(3):
-        S.write_srp_partitioned(
-            vecs.where(F.col("vec_id") % 3 == i), hive, append=(i > 0)
-        )
-    multi = [
-        len([f for f in files if f.endswith(".parquet")])
-        for _root, _dirs, files in os.walk(hive)
-        if any(f.endswith(".parquet") for f in files)
-    ]
-    assert max(multi) > 1, "fixture did not produce a multi-file bucket"
-    S.compact_srp_index(spark, hive, flatten=False)
-    for root, _dirs, files in os.walk(hive):
-        pq = [f for f in files if f.endswith(".parquet")]
-        if pq:
-            assert len(pq) == 1, (root, pq)
-    # compacted hive layout still serves the same search results
-    assert (
-        S.ann_srp_search_indexed(spark, vecs, hive).collect() == inline
-    )
+    assert S.ann_srp_search_indexed(spark, vecs, idx).collect() == inline
+
+
+def test_srp_compaction_crash_points_keep_the_index(spark, sf_dir, tmp_path, monkeypatch):
+    """compact_srp_index works in place (list, stage, move, delete), so
+    an interruption at any step leaves a superset of the signature rows
+    at the index path: after a crash in the stage write, in the k-th
+    file move or in the k-th delete, the index reads back exactly the
+    srp_signatures set (duplicate rows allowed — the search pools
+    distinct cand_ids), and a re-run compacts it to one file per tbl
+    dir with the same set. A compaction that swaps the index out and
+    the stage in by two renames fails this: a crash between them
+    leaves no index at the path."""
+    import os
+    import shutil
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from mysense_spark.operators import similarity as S
+
+    vecs = S._vectors(spark, sf_dir).where(F.col("vec_id") < 200)
+    want = {tuple(r) for r in S.srp_signatures(vecs).select("vec_id", "tbl", "bucket").collect()}
+    idx = str(tmp_path / "srp_idx")
+
+    def build():
+        shutil.rmtree(idx, ignore_errors=True)
+        S.write_srp_partitioned(vecs.where(F.col("vec_id") % 2 == 0), idx)
+        S.write_srp_partitioned(vecs.where(F.col("vec_id") % 2 == 1), idx, append=True)
+
+    def read_back():
+        return {
+            tuple(r) for r in spark.read.parquet(idx).select("vec_id", "tbl", "bucket").collect()
+        }
+
+    class Crash(Exception):
+        pass
+
+    def counting(name, crash_at=None):
+        orig = getattr(os, name)
+        calls = []
+
+        def hook(*a, **k):
+            calls.append(a)
+            if len(calls) == crash_at:
+                raise Crash(f"{name} #{crash_at}")
+            return orig(*a, **k)
+
+        return hook, calls
+
+    # a clean run counts the moves (os.rename) and deletes (os.remove)
+    build()
+    with monkeypatch.context() as m:
+        rename, moves = counting("rename")
+        remove, deletes = counting("remove")
+        m.setattr(os, "rename", rename)
+        m.setattr(os, "remove", remove)
+        S.compact_srp_index(spark, idx)
+    assert moves and read_back() == want
+
+    orig_parquet = DataFrameWriter.parquet
+
+    def stage_write_then_crash(self, path, *a, **k):
+        orig_parquet(self, path, *a, **k)
+        raise Crash("stage write")
+
+    cases = [("stage write", DataFrameWriter, "parquet", stage_write_then_crash)]
+    for name, n in (("rename", len(moves)), ("remove", len(deletes))):
+        for k in sorted({1, (n + 1) // 2, n}) if n else ():
+            cases.append((f"{name} #{k}", os, name, counting(name, crash_at=k)[0]))
+    for label, target, attr, hook in cases:
+        build()
+        with monkeypatch.context() as m:
+            m.setattr(target, attr, hook)
+            try:
+                S.compact_srp_index(spark, idx)
+            except Crash:
+                pass
+            else:
+                raise AssertionError(f"{label}: crash point never reached")
+        assert read_back() == want, label
+        S.compact_srp_index(spark, idx)
+        assert read_back() == want, label
+        for d in (d for d in os.listdir(idx) if d.startswith("tbl=")):
+            files = [f for f in os.listdir(os.path.join(idx, d)) if f.endswith(".parquet")]
+            assert len(files) == 1, (label, d, files)

@@ -979,7 +979,7 @@ def test_auto_compact_is_opt_in_everywhere():
 def test_srp_index_stream_incremental(spark, sf_dir, tmp_path):
     """run_srp_index_stream (late r12): the SRP tier's streaming niche
     made concrete — a vector drop directory maintained as a
-    bucket-partitioned signature index by foreachBatch appends.
+    tbl-partitioned signature index by foreachBatch appends.
     (a) the first drain indexes exactly the batch's signatures (equal
     to the batch srp_signatures of the same vectors); (b) a second
     drop file drained against the SAME checkpoint appends only the new
@@ -1065,7 +1065,7 @@ def test_srp_stream_index_search_equals_batch(spark, sf_dir, tmp_path):
     test: a STREAM-maintained index (run_srp_index_stream over two
     drop files against one checkpoint) driven through the deployed
     search path — batch query signatures -> multi-probe expansion ->
-    read_srp_buckets directory-pruned probe -> fenced exact re-rank —
+    read_srp_buckets pruned probe -> fenced exact re-rank —
     must return exactly what the batch ann_srp_search returns on the
     same vectors at the same shape. The pieces were individually
     pinned before; this proves the composition: an index grown by
@@ -1115,13 +1115,15 @@ def test_srp_stream_index_search_equals_batch(spark, sf_dir, tmp_path):
         for r in _srp_probe_variants(qsigs, 8, 1).distinct().collect()
     ]
     bucket_rows = read_srp_buckets(spark, idx, probes)
-    # directory prune must reach the scan: the probed (tbl, bucket)
-    # pairs are partition columns, so the predicate is a PartitionFilter
+    # the prune must reach the scan: tbl is the partition column (a
+    # PartitionFilter), the bucket predicate is pushed to parquet
     import re as _re
 
     plan = bucket_rows._jdf.queryExecution().executedPlan().toString()
-    m = _re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "tbl" in m.group(1) and "bucket" in m.group(1)
+    m = _re.search(r"PartitionFilters: \[([^\]]*)", plan)
+    assert m and "tbl" in m.group(1), plan[:600]
+    m = _re.search(r"DataFilters: \[([^\]]*)", plan)
+    assert m and "bucket" in m.group(1), plan[:600]
     pool = bucket_rows.select(F.col("vec_id").alias("cand_id")).distinct()
     streamed = [tuple(r) for r in _rerank_pool(vecs, pool, top_k=5).orderBy("query_id", "rank").collect()]
     batch = [
@@ -1135,12 +1137,11 @@ def test_srp_stream_index_search_equals_batch(spark, sf_dir, tmp_path):
 
 def test_srp_stream_survives_compaction_cycles(spark, sf_dir, tmp_path):
     """The streaming-maintenance x compaction composition (r15): a
-    drop-dir stream builds the SRP index, compact_srp_index(flatten)
-    collapses it to tbl-only partitioning in the maintenance window,
-    and the SAME stream (same checkpoint) keeps appending afterwards —
-    the sink detects the flat layout and appends flat (a hive append
-    would mix partition depths and break the read). After the cycle:
-    (a) the layout stays flat-consistent (no bucket= dirs); (b) the
+    drop-dir stream builds the SRP index, compact_srp_index compacts it
+    in place in the maintenance window, and the SAME stream (same
+    checkpoint) keeps appending afterwards. After the cycle: (a) the
+    layout stays partitioned by tbl only (no bucket= dirs) and every
+    data file agrees on the bucket column's physical type; (b) the
     signature set equals the batch signatures of the union; (c) a
     probed read still prunes on tbl and pushes the bucket predicate."""
     import json as _json
@@ -1173,7 +1174,7 @@ def test_srp_stream_survives_compaction_cycles(spark, sf_dir, tmp_path):
     q = run_srp_index_stream(spark, str(in_dir), ckpt, idx)
     q.awaitTermination(120)
 
-    compact_srp_index(spark, idx)  # maintenance window: flatten
+    compact_srp_index(spark, idx)  # maintenance window
 
     (in_dir / "b.jsonl").write_text(
         "\n".join(_json.dumps(r) for r in rows if r["vec_id"] >= 10)
@@ -1185,11 +1186,10 @@ def test_srp_stream_survives_compaction_cycles(spark, sf_dir, tmp_path):
         assert not any(d.startswith("bucket=") for d in dirs), (root, dirs)
 
     # every data file must agree on the bucket column's PHYSICAL type —
-    # the compacted files (hive partition values re-inferred int32
-    # before the r15 normalization) and the flat-append files
-    # (srp_signatures bigint) must not mix, or reads fail depending on
-    # which file schema inference lists first (order-dependent flake
-    # caught by the full-suite run; deterministic pin here)
+    # compacted files and appended files must not mix int32 and bigint,
+    # or reads fail depending on which file schema inference lists
+    # first (an order-dependent flake once caught by the full-suite
+    # run; deterministic pin here)
     import pyarrow.parquet as pq
 
     bucket_types = set()

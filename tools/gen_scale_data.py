@@ -196,7 +196,7 @@ def gen_tpch(rng: np.random.Generator, out_dir: str, sf: float) -> None:
 def main() -> None:
     # flags filtered out BEFORE positional unpacking (r14 advice:
     # `gen_scale_data.py --tpch out 1.0` crashed with float('--tpch')
-    # instead of a usage error — same pattern as srp_smallfiles_probe)
+    # instead of a usage error)
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     if len(args) != 2:
         sys.exit("usage: gen_scale_data.py OUT_DIR SF [--tpch]")
