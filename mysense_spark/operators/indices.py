@@ -39,17 +39,18 @@ from .util import ieee_round, exact_avg, sql_avg
 # ---------------------------------------------------------------------------
 
 def piecewise(col: Column, table: list[tuple[float, float, float, float]], cap: float, nd: int = 8) -> Column:
-    # nd=8: deeper than the exact decimal resolution of any segment product,
-    # so the half-up vs float-multiply rounding of the two engines can never
-    # land on a .5 tie (see operators/util.py rationale).
-    expr: Column | None = None
+    # ieee_round, not native round: Spark's round(double, d) rounds the
+    # shortest decimal string half-up, DuckDB rounds the binary double,
+    # so an 8-decimal tie (537.866537445) comes out 1e-8 apart. The IEEE
+    # floor form matches DuckDB's round on these positive index values
+    # (see operators/util.py rationale).
     # build bottom-up: ELSE cap, then wrap WHENs from last to first segment
     result = F.lit(float(cap))
     for lo, hi, alo, ahi in reversed(table):
         slope = (ahi - alo) / (hi - lo)
         seg = F.lit(alo) + (F.greatest(col, F.lit(lo)) - F.lit(lo)) * F.lit(slope)
         result = F.when(col <= F.lit(hi), seg).otherwise(result)
-    return F.round(result, nd)
+    return ieee_round(result, nd)
 
 
 def sql_piecewise(e: str, table: list[tuple[float, float, float, float]], cap: float, nd: int = 8) -> str:

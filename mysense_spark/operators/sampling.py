@@ -549,10 +549,14 @@ def write_packed_shards(df: DataFrame, path: str) -> None:
     so a trainer streams them in order. One file per shard (the
     repartition keys the writer tasks by shard), so the layout's file
     count is _PACK_SHARDS, not O(upstream tasks) — the small-files
-    posture of write_srp_partitioned applied to training data."""
+    posture of write_srp_partitioned applied to training data. The
+    sort leads with the partition column: unless the input order
+    already starts with `shard`, the partitioned writer adds its own
+    sort by `shard` alone, and the optimizer drops a chunk-only sort
+    beneath it."""
     (
         df.repartition(_PACK_SHARDS, "shard")
-        .sortWithinPartitions("chunk")
+        .sortWithinPartitions("shard", "chunk")
         .write.mode("overwrite")
         .partitionBy("shard")
         .parquet(path)

@@ -619,34 +619,29 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ann_ivf_search(
-    vecs: DataFrame, nprobe: int = _NPROBE, centroids: DataFrame | None = None
+    vecs: DataFrame,
+    nprobe: int = _NPROBE,
+    centroids: DataFrame | None = None,
+    parts: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """The IVF search engine with the recall/cost knob exposed: probe the
     `nprobe` nearest clusters per query (candidates scanned ~ nprobe/K of
-    the corpus; recall rises with nprobe — measured curve in SCALING.md).
+    the corpus; recall rises with nprobe — measured curve in SCALING.md),
+    then rank the probed cells' candidates by rounded cosine, top-5.
 
-    `centroids` (vec_id, v, norm) selects the codebook for the flat
-    scan path; with NO codebook argument the engine defaults to the
-    TRAINED two-level codebook (Lloyd-refined, pruned assignment —
-    _ann_ivf_trained), so the fixture constants are an explicit opt-in
-    of the graded q_ann_ivf, not the engine default."""
-    if centroids is None:
-        return _ann_ivf_trained(vecs, nprobe)
-    # nearest centroid per vector: the agg form (ivf_membership) — the
-    # window form would drag the vectors through an N×K exchange
-    membership = ivf_membership(vecs, centroids)
-    # probes: top-nprobe cells per QUERY vector — the window runs on the
-    # query subset only (the vec_id filter pushes below the window: it
-    # is the partition key)
-    probes = (
-        ivf_assigned(vecs.where(F.col("vec_id") < _N_QUERIES), centroids)
-        .where(F.col("crank") <= nprobe)
-        .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("norm").alias("qnorm"), "cent_id")
-    )
+    Routing is _route: `centroids` (vec_id, v, norm) selects the flat
+    codebook path; with NO codebook argument the engine defaults to the
+    TRAINED two-level codebook (Lloyd-refined, pruned assignment), so
+    the fixture constants are an explicit opt-in of the graded
+    q_ann_ivf, not the engine default. `parts` lets a sweep
+    (tools/ivf_recall_curve.py) train the codebook ONCE and vary nprobe
+    against it — without it, every call retrains and re-persists the
+    whole two-level construction."""
+    membership, probes = _route(vecs, nprobe, centroids, parts)
     cand = membership.select(
         F.col("vec_id").alias("cand_id"), F.col("v").alias("cv"), F.col("norm").alias("cnorm"), "cent_id"
     )
-    cos_qc = ieee_round(_dot(F.col("qv"), F.col("cv")) / (F.col("qnorm") * F.col("cnorm")), 6)
+    cos_qc = ieee_round(_dot(F.col("pv"), F.col("cv")) / (F.col("qnorm") * F.col("cnorm")), 6)
     scored = (
         probes.join(cand, "cent_id")
         .where(F.col("query_id") != F.col("cand_id"))
@@ -698,63 +693,6 @@ ORDER BY query_id, rank
 """
 
 
-def _ann_ivf_trained(
-    vecs: DataFrame,
-    nprobe: int = _NPROBE,
-    parts: tuple[DataFrame, DataFrame, DataFrame] | None = None,
-) -> DataFrame:
-    """IVF search against the TRAINED two-level codebook: membership
-    from the pruned assignment (two_level_membership), probes ranked by
-    integer-grid L2 against the Lloyd-refined fine centroids. Query
-    probe ranking broadcasts the fine codebook (K ≈ N/64 rows of 64
-    int64s); past broadcast scale the probe ranking goes through the
-    coarse level first — the same two-level trick the membership uses.
-    Same output shape as the fixture path: top-5 per query by rounded
-    cosine over the probed cells only.
-
-    `parts` lets a sweep (tools/ivf_recall_curve.py) train the codebook
-    ONCE and vary nprobe against it — without it, every call retrains
-    and re-persists the whole two-level construction."""
-    _, f1cell, final = parts if parts is not None else _two_level_parts(vecs)
-    membership = vecs.join(final, "vec_id").select("vec_id", "v", "norm", "cent_id")
-    q = vecs.where(F.col("vec_id") < _N_QUERIES).select(
-        "vec_id", "v", "norm", F.expr(_QV_EXPR).alias("qv")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(f1cell.select("fine_id", "fqv1")))
-        .withColumn("dist", _int_l2(F.col("qv"), F.col("fqv1")))
-        .withColumn(
-            "crank",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(F.asc("dist"), F.asc("fine_id"))
-            ),
-        )
-        .where(F.col("crank") <= nprobe)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("pv"),
-            F.col("norm").alias("qnorm"),
-            F.col("fine_id").alias("cent_id"),
-        )
-    )
-    cand = membership.select(
-        F.col("vec_id").alias("cand_id"), F.col("v").alias("cv"), F.col("norm").alias("cnorm"), "cent_id"
-    )
-    cos_qc = ieee_round(_dot(F.col("pv"), F.col("cv")) / (F.col("qnorm") * F.col("cnorm")), 6)
-    scored = (
-        probes.join(cand, "cent_id")
-        .where(F.col("query_id") != F.col("cand_id"))
-        .withColumn("cosine", cos_qc)
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 5)
-        .select("query_id", "rank", "cand_id", "cosine")
-        .orderBy("query_id", "rank")
-    )
-
-
 def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graded twin of q_ann_ivf on the TRAINED codebook — the engine's
     default non-fixture path (ann_ivf_search with no codebook argument):
@@ -778,8 +716,9 @@ def _route(
     centroids: DataFrame | None,
     parts: tuple[DataFrame, DataFrame, DataFrame] | None,
 ) -> tuple[DataFrame, DataFrame]:
-    """ONE definition of the IVF routing stage shared by the two-stage
-    refined search and IVFADC: returns (membership, probes) —
+    """ONE definition of the IVF routing stage shared by every IVF-family
+    search (flat, refined, IVFADC, IVFPQ, IVF-SQ and the persisted
+    IVFADC's query routing): returns (membership, probes) —
     membership (vec_id, v, norm, cent_id) assigns every corpus vector to
     its cell, probes (query_id, pv, qnorm, cent_id) lists each query's
     `nprobe` cells. `centroids` (vec_id, v, norm) selects the fixture /
@@ -823,6 +762,21 @@ def _route(
             )
         )
     return membership, probes
+
+
+def _shortlist(scored: DataFrame, order: Column, size: int) -> DataFrame:
+    """ONE definition of the scoring stage's shortlist, shared by every
+    two-stage search: rank each query's scored candidates by `order`
+    (the approximate score, best first) with the cand_id tie-break, keep
+    the top `size`, and pool the distinct cand_ids across queries for
+    the fenced exact re-rank (_rerank_pool)."""
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("cand_id"))
+    return (
+        scored.withColumn("srank", F.row_number().over(w))
+        .where(F.col("srank") <= size)
+        .select("cand_id")
+        .distinct()
+    )
 
 
 def ann_ivf_refined(
@@ -875,20 +829,12 @@ def ann_ivf_refined(
     # probes are <= queries x nprobe rows — broadcast them so the
     # corpus-wide membership never exchanges on cent_id for this join
     # (the Window above hides the tiny size from the stats estimator)
-    pooled = (
+    scored = (
         F.broadcast(probes).join(cand, "cent_id")
         .where(F.col("query_id") != F.col("cand_id"))
         .withColumn("approx", approx)
-        .withColumn(
-            "prank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(F.desc("approx"), F.asc("cand_id"))
-            ),
-        )
-        .where(F.col("prank") <= pool)
-        .select("cand_id")
-        .distinct()
     )
+    pooled = _shortlist(scored, F.desc("approx"), pool)
     # stage 2: full-precision re-rank of the pooled union through the
     # fenced tier — queries bounded by the fence, candidates by `pool`
     out = _rerank_pool(vecs, pooled, top_k=5)
@@ -1168,6 +1114,23 @@ _ADC_EXPR = (
 )
 
 
+def _adc_scored(
+    cell_codes: DataFrame, probes: DataFrame, luts: DataFrame, keys: tuple[str, ...]
+) -> DataFrame:
+    """ONE definition of the cell-pruned ADC scan shared by IVFADC,
+    IVFADC-indexed and IVFPQ: cell codes (cand_id, codes, cent_id) ⋈
+    the broadcast (query_id, cent_id) probe list — the prune: probed
+    cells only — ⋈ the broadcast LUTs on `keys` (query_id for raw-vector
+    codes, (query_id, cent_id) for per-cell residual LUTs) ->
+    (query_id, cand_id, adc_dist)."""
+    return (
+        cell_codes.join(F.broadcast(probes.select("query_id", "cent_id")), "cent_id")
+        .join(F.broadcast(luts), list(keys))
+        .where(F.col("query_id") != F.col("cand_id"))
+        .select("query_id", "cand_id", F.expr(_ADC_EXPR).alias("adc_dist"))
+    )
+
+
 def ann_pq_search(
     vecs: DataFrame,
     top_k: int = 5,
@@ -1259,31 +1222,15 @@ def ann_ivfadc_search(
     `return_pool` also returns the pooled-union ids so the sweep can
     measure the actual full-precision scan fraction."""
     membership, probes = _route(vecs, nprobe, centroids, route_parts)
-    membership = membership.select("vec_id", "cent_id")
-    probes = probes.select("query_id", "cent_id")
     cents, codes = parts if parts is not None else _pq_parts(vecs)
-    subd = 64 // _PQ_M
-    qluts = _pq_qluts(vecs, cents, subd)
+    qluts = _pq_qluts(vecs, cents, 64 // _PQ_M)
     # the cell id rides with the codes (at scale: written once, cell-
     # partitioned); here the N-row equi-join builds that layout inline
-    cell_codes = codes.join(membership, "vec_id").withColumnRenamed("vec_id", "cand_id")
-    scored = (
-        cell_codes.join(F.broadcast(probes), "cent_id")  # prune: probed cells only
-        .join(F.broadcast(qluts), "query_id")
-        .where(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.expr(_ADC_EXPR).alias("adc_dist"),
-        )
+    cell_codes = codes.join(membership.select("vec_id", "cent_id"), "vec_id").withColumnRenamed(
+        "vec_id", "cand_id"
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("cand_id"))
-    pooled = (
-        scored.withColumn("srank", F.row_number().over(w))
-        .where(F.col("srank") <= shortlist)
-        .select("cand_id")
-        .distinct()
-    )
+    scored = _adc_scored(cell_codes, probes, qluts, ("query_id",))
+    pooled = _shortlist(scored, F.asc("adc_dist"), shortlist)
     out = _rerank_pool(vecs, pooled, top_k=top_k)
     return (out, pooled) if return_pool else out
 
@@ -1408,23 +1355,11 @@ def ann_ivfpq_search(
         .select("query_id", "cent_id", res.alias("qv"))
     )
     rluts = _pq_luts_from(qres, cents, subd, ("query_id", "cent_id"))
-    cell_codes = (
-        codes.join(membership.select("vec_id", "cent_id"), "vec_id")
-        .withColumnRenamed("vec_id", "cand_id")
+    cell_codes = codes.join(membership.select("vec_id", "cent_id"), "vec_id").withColumnRenamed(
+        "vec_id", "cand_id"
     )
-    scored = (
-        cell_codes.join(F.broadcast(probes.select("query_id", "cent_id")), "cent_id")
-        .join(F.broadcast(rluts), ["query_id", "cent_id"])
-        .where(F.col("query_id") != F.col("cand_id"))
-        .select("query_id", "cand_id", F.expr(_ADC_EXPR).alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("cand_id"))
-    pooled = (
-        scored.withColumn("srank", F.row_number().over(w))
-        .where(F.col("srank") <= shortlist)
-        .select("cand_id")
-        .distinct()
-    )
+    scored = _adc_scored(cell_codes, probes, rluts, ("query_id", "cent_id"))
+    pooled = _shortlist(scored, F.asc("adc_dist"), shortlist)
     out = _rerank_pool(vecs, pooled, top_k=top_k)
     return (out, pooled) if return_pool else out
 
@@ -2427,11 +2362,8 @@ def ann_ivfadc_search_indexed(
     # broadcast join below would re-evaluate the whole routing lineage
     # (directory read + query scan + crossJoin) a second time (r14
     # review catch on the warm path this feature exists to optimize)
-    probes = (
-        ivf_assigned(vecs.where(F.col("vec_id") < _N_QUERIES), directory)
-        .where(F.col("crank") <= nprobe)
-        .select(F.col("vec_id").alias("query_id"), "cent_id")
-    )
+    _, probes = _route(vecs, nprobe, directory, None)  # membership unused: lazy
+    probes = probes.select("query_id", "cent_id")
     probe_rows = probes.collect()
     probes = spark.createDataFrame(
         [(int(r["query_id"]), int(r["cent_id"])) for r in probe_rows],
@@ -2444,20 +2376,8 @@ def ann_ivfadc_search_indexed(
         F.col("cent_id").cast("long").alias("cent_id"),
     )
     qluts = _pq_qluts(vecs, cents, 64 // _PQ_M)
-    scored = (
-        cell_codes.join(F.broadcast(probes), "cent_id")
-        .join(F.broadcast(qluts), "query_id")
-        .where(F.col("query_id") != F.col("cand_id"))
-        .select("query_id", "cand_id", F.expr(_ADC_EXPR).alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("cand_id"))
-    pooled = (
-        scored.withColumn("srank", F.row_number().over(w))
-        .where(F.col("srank") <= shortlist)
-        .select("cand_id")
-        .distinct()
-    )
-    return _rerank_pool(vecs, pooled, top_k=top_k)
+    scored = _adc_scored(cell_codes, probes, qluts, ("query_id",))
+    return _rerank_pool(vecs, _shortlist(scored, F.asc("adc_dist"), shortlist), top_k=top_k)
 
 
 def q_ann_ivfadc_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2983,7 +2903,7 @@ def ann_sq8_search(
         .where(F.col("query_id") != F.col("cand_id"))
         .select("query_id", "cand_id", F.expr(_SQ8_COS_EXPR).alias("sq_cos"))
     )
-    return _sq8_tail(vecs, scored, shortlist, top_k)
+    return _rerank_pool(vecs, _shortlist(scored, F.desc("sq_cos"), shortlist), top_k=top_k)
 
 
 # the rounded approximate cosine over (qg, qn | dq, dn) — ONE definition
@@ -3087,22 +3007,6 @@ def _sq8_scan_sides(
     return _sq8_queries(vecs), cand
 
 
-def _sq8_tail(
-    vecs: DataFrame, scored: DataFrame, shortlist: int, top_k: int
-) -> DataFrame:
-    """Shortlist window + fenced exact re-rank — the shared tail of
-    both SQ8 scans (sq_cos DESC with the cand_id tie-break is exactly
-    the oracle tail's adc_dist ASC on the negated cosine)."""
-    w = Window.partitionBy("query_id").orderBy(F.desc("sq_cos"), F.asc("cand_id"))
-    pooled = (
-        scored.withColumn("srank", F.row_number().over(w))
-        .where(F.col("srank") <= shortlist)
-        .select("cand_id")
-        .distinct()
-    )
-    return _rerank_pool(vecs, pooled, top_k=top_k)
-
-
 def q_ann_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graded entry: SQ8 approximate scan -> top-48 shortlist -> exact
     re-rank top-5. The DuckDB oracle mirrors the WHOLE chain — per-dim
@@ -3200,7 +3104,7 @@ def ann_ivfsq_search(
         .where(F.col("query_id") != F.col("cand_id"))
         .select("query_id", "cand_id", F.expr(_SQ8_COS_EXPR).alias("sq_cos"))
     )
-    return _sq8_tail(vecs, scored, shortlist, top_k)
+    return _rerank_pool(vecs, _shortlist(scored, F.desc("sq_cos"), shortlist), top_k=top_k)
 
 
 def q_ann_ivfsq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3432,10 +3336,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     this extends its dedup family (§2 A8-adjacent) to the
     training-data-curation workload the brief names first-class."""
     vecs = _vectors(spark, sf_dir)
-    fixture = vecs.where(
-        (F.col("vec_id") >= _CENTROID_BASE) & (F.col("vec_id") < _CENTROID_BASE + _N_CENTROIDS)
-    )
-    return semdedup_pairs(vecs, fixture)
+    return semdedup_pairs(vecs, _fixture_centroids(vecs))
 
 
 def semdedup_pairs(
@@ -3503,26 +3404,6 @@ _SEM_TARGET_CLUSTER = 64
 
 def modulo_centroids(vecs: DataFrame, target_cluster_size: int = _SEM_TARGET_CLUSTER) -> DataFrame:
     return vecs.where(F.col("vec_id") % target_cluster_size == 0)
-
-
-def sqrt_centroids(vecs: DataFrame) -> DataFrame:
-    """K ≈ √N centroid rule (centroid ⇔ vec_id is a perfect square —
-    lazy, no count, dense-id assumption like the modulo rule). With
-    brute-force nearest-centroid assignment, total work is
-    N·K (assignment) + N·(N/K) (in-cluster pairs): K ∝ N bounds the
-    pair stage but makes assignment N²/target; K ≈ √N balances both at
-    O(N^1.5) — the best exponent BRUTE-FORCE assignment admits. Kept as
-    the documented balance point for flat scans; the engine default
-    since r8 is the trained two-level codebook below, whose PRUNED
-    assignment join drops the brute-force term entirely (measured
-    assignment α = 0.18, SCALING.md)."""
-    # integer-safe perfect-square test: double sqrt of a vec_id beyond
-    # ~2^52 can land a hair below the true root and floor to r-1, which
-    # would silently drop a centroid — so accept r*r OR (r+1)*(r+1),
-    # with both compares in exact int64
-    r = F.floor(F.sqrt(F.col("vec_id").cast("double"))).cast("long")
-    is_sq = ((r * r) == F.col("vec_id")) | (((r + 1) * (r + 1)) == F.col("vec_id"))
-    return vecs.where(is_sq)
 
 
 # ---------------------------------------------------------------------------
@@ -3742,6 +3623,50 @@ def _nearest_routed_shuffle(
     )
 
 
+def _nearest_coarse(
+    rows: DataFrame,
+    cands: DataFrame,
+    routing: tuple[DataFrame, DataFrame, bool, bool] | None,
+) -> DataFrame:
+    """ONE definition of the trained codebook's coarse-argmin tier
+    switch, used for both seed→coarse (trained_codebook) and vec→coarse
+    (_two_level_parts), so the two always take the same physical tier:
+    rows (…, qv) + the `coarse_id` of the nearest candidate among
+    `cands` (coarse_id, cqv, …). `routing` is trained_codebook's
+    (route, croute, shuffle_tier, single_cell) tuple:
+    - None (the test-only flat build) or a single route cell (which
+      would prune nothing): the broadcast argmin over every candidate;
+    - K1 above the broadcast ceiling: the salted shuffle-routed join
+      (no O(K1) broadcast at any N);
+    - otherwise the fused one-broadcast routed argmin."""
+    if routing is None:
+        return _nearest_bcast(rows, cands, "qv", "coarse_id", "cqv")
+    route, croute, shuffle_tier, single_cell = routing
+    if shuffle_tier:
+        return _nearest_routed_shuffle(
+            rows, "qv", route, cands.join(croute, "coarse_id"), "coarse_id", "cqv"
+        )
+    if single_cell:
+        return _nearest_bcast(rows, cands, "qv", "coarse_id", "cqv")
+    return _nearest_routed(rows, "qv", route, cands.join(croute, "coarse_id"), "coarse_id", "cqv")
+
+
+def _int_mean(members: DataFrame, cid: str, out: str) -> DataFrame:
+    """One integer-grid Lloyd update: (cid, qv) member rows -> (cid,
+    out) where `out` is the per-dimension integer mean (s DIV n — both
+    engines truncate toward zero) of each cell's members. ONE definition
+    for the coarse and the fine refinement."""
+    return (
+        members.select(cid, F.posexplode("qv").alias("d", "q"))
+        .groupBy(cid, "d")
+        .agg(F.sum("q").alias("s"), F.count(F.lit(1)).alias("n"))
+        .withColumn("cq", F.expr("s DIV n"))
+        .groupBy(cid)
+        .agg(F.array_sort(F.collect_list(F.struct("d", "cq"))).alias("a"))
+        .select(cid, F.expr("transform(a, p -> p.cq)").alias(out))
+    )
+
+
 def trained_codebook(
     vecs: DataFrame,
     route_group: int | None = None,
@@ -3871,13 +3796,7 @@ def trained_codebook(
         F.col("vec_id").alias("coarse_id"), F.col("qv").alias("cqv"), "h", "is_anchor"
     )
     routing: tuple[DataFrame, DataFrame, bool, bool] | None = None
-    if flat:
-        a0 = tracked_persist(
-            _nearest_bcast(seeds, c0, "qv", "coarse_id", "cqv").select(
-                "vec_id", "qv", "coarse_id"
-            )
-        )
-    else:
+    if not flat:
         # tier decision: K1 (coarse candidates = would-be broadcast
         # payload) and K2 (route cells) in ONE bounded stats aggregate
         # over the persisted seeds — two ints, the codebook analogue of
@@ -3888,10 +3807,6 @@ def trained_codebook(
         # consumer reuses)
         s1, s2 = fine_mod * group, fine_mod * group * route_group
         k1, k2 = seeds.agg(_stratum_count(s1), _stratum_count(s2)).first()
-        # an EMPTY corpus sums to NULL, not 0 — keep the empty input
-        # flowing through to an empty (broadcast-tier) result instead
-        # of a TypeError at plan-build time
-        shuffle_tier, single_cell = (k1 or 0) > bcast_k1, (k2 or 0) <= 1
         # third level: the same hash rule one more stratum up — a SUBSET
         # of the coarse inits (so each route cell contains its own
         # anchor as a coarse candidate and the pruned joins below are
@@ -3906,43 +3821,23 @@ def trained_codebook(
         croute = _nearest_bcast(c0, route, "cqv", "route_id", "rqv").select(
             "coarse_id", "route_id"
         )
-        # seed → (nearest route cell → nearest coarse init within it):
-        # the tier flags pick the plan shape — elided broadcast argmin
-        # when the route level is one cell (it would prune nothing),
-        # the fused one-broadcast routed argmin while K1 fits the
-        # broadcast ceiling, else the salted shuffle-routed join (an
-        # anchor attracts itself at 0, so every seed's route cell
-        # offers ≥1 coarse candidate in every tier)
-        # persisted: a0 is the K-row trained fine codebook (it IS `fine`
-        # modulo renames) and its materialization absorbs the route /
-        # croute broadcast builds, which would otherwise re-execute in
-        # every downstream consumer
-        if shuffle_tier:
-            assign = _nearest_routed_shuffle(
-                seeds, "qv", route, c0.join(croute, "coarse_id"), "coarse_id", "cqv"
-            )
-        elif single_cell:
-            assign = _nearest_bcast(seeds, c0, "qv", "coarse_id", "cqv")
-        else:
-            assign = _nearest_routed(
-                seeds, "qv", route, c0.join(croute, "coarse_id"), "coarse_id", "cqv"
-            )
-        a0 = tracked_persist(assign.select("vec_id", "qv", "coarse_id"))
-        routing = (route, croute, shuffle_tier, single_cell)
-    # a0 carries qv (map-derived), so the Lloyd refinement and the fine
+        # an EMPTY corpus sums to NULL, not 0 — keep the empty input
+        # flowing through to an empty (broadcast-tier) result instead
+        # of a TypeError at plan-build time
+        routing = (route, croute, (k1 or 0) > bcast_k1, (k2 or 0) <= 1)
+    # seed → nearest coarse init on the tier _nearest_coarse picks (an
+    # anchor attracts itself at 0, so every seed's route cell offers ≥1
+    # coarse candidate in every tier). Persisted: a0 is the K-row
+    # trained fine codebook (it IS `fine` modulo renames) and its
+    # materialization absorbs the route / croute broadcast builds, which
+    # would otherwise re-execute in every downstream consumer. a0
+    # carries qv (map-derived), so the Lloyd refinement and the fine
     # table need no join-back to seeds
-    mem = a0.select("coarse_id", F.posexplode("qv").alias("d", "q"))
+    a0 = tracked_persist(_nearest_coarse(seeds, c0, routing).select("vec_id", "qv", "coarse_id"))
     # coarse has ONE consumer (the vec→coarse scoring in
     # _two_level_parts) — no persist boundary; fine (K rows) feeds the
     # af equi-join AND f1cell, so it keeps its persist
-    coarse = (
-        mem.groupBy("coarse_id", "d")
-        .agg(F.sum("q").alias("s"), F.count(F.lit(1)).alias("n"))
-        .withColumn("cq", F.expr("s DIV n"))
-        .groupBy("coarse_id")
-        .agg(F.array_sort(F.collect_list(F.struct("d", "cq"))).alias("a"))
-        .select("coarse_id", F.expr("transform(a, p -> p.cq)").alias("cqv"))
-    )
+    coarse = _int_mean(a0, "coarse_id", "cqv")
     fine = a0.select(
         F.col("vec_id").alias("fine_id"), "coarse_id", F.col("qv").alias("fqv")
     )
@@ -3991,7 +3886,7 @@ def _two_level_parts(
     """Shared internals of the trained-codebook assignment: returns
     (vca, f1cell, final) — vector→coarse map, refined fine centroids
     with their coarse cell (fine_id, coarse_id, fqv1), and the final
-    (vec_id, cent_id) membership. ann_ivf's trained probe ranking needs
+    (vec_id, cent_id) membership. _route's trained probe ranking needs
     f1cell; semdedup needs only the membership. The vec→coarse step
     goes through the trained route level by default (r9 — see
     trained_codebook); `route_group` overrides the stride, and the
@@ -4004,30 +3899,11 @@ def _two_level_parts(
     # repartition BEFORE the broadcast scoring stages (the ivf_membership
     # parallelism lesson: inherit cores, not parquet file count)
     qvecs = vecs.select("vec_id", F.expr(_QV_EXPR).alias("qv")).repartition(par)
-    if routing is None:
-        vca_plan = _nearest_bcast(qvecs, coarse, "qv", "coarse_id", "cqv")
-    else:
-        # vec → (nearest route cell → nearest refined coarse centroid
-        # within it) on the SAME physical tier trained_codebook resolved
-        # for the seeds — elided broadcast argmin (single route cell:
-        # routing would prune nothing), fused one-broadcast routed
-        # argmin (multi-cell under the broadcast ceiling — zero
-        # shuffles), or the salted shuffle-routed join (K1 above the
-        # ceiling — no O(K1) broadcast at any N). The Lloyd-refined
-        # coarse centroids keep their INIT's route label (the routing
-        # is trained on inits; refinement moves centroids within their
-        # cell)
-        route, croute, shuffle_tier, single_cell = routing
-        if shuffle_tier:
-            vca_plan = _nearest_routed_shuffle(
-                qvecs, "qv", route, coarse.join(croute, "coarse_id"), "coarse_id", "cqv"
-            )
-        elif single_cell:
-            vca_plan = _nearest_bcast(qvecs, coarse, "qv", "coarse_id", "cqv")
-        else:
-            vca_plan = _nearest_routed(
-                qvecs, "qv", route, coarse.join(croute, "coarse_id"), "coarse_id", "cqv"
-            )
+    # vec → nearest refined coarse centroid on the SAME physical tier
+    # trained_codebook resolved for the seeds. The Lloyd-refined coarse
+    # centroids keep their INIT's route label (the routing is trained on
+    # inits; refinement moves centroids within their cell)
+    vca_plan = _nearest_coarse(qvecs, coarse, routing)
     # vca carries qv through (map-derived, so no qvecs join-back): ONE
     # persisted corpus-wide table replaces r8's two (qvecs + vca)
     vca = tracked_persist(vca_plan.select("vec_id", "qv", "coarse_id"))
@@ -4035,17 +3911,9 @@ def _two_level_parts(
         vca, fine, "vec_id", "qv", "fine_id", "fqv",
         on="coarse_id", bcast=False, keep=["qv"],
     )
-    memf = af.select("fine_id", F.posexplode("qv").alias("d", "q"))
-    f1 = (
-        memf.groupBy("fine_id", "d")
-        .agg(F.sum("q").alias("s"), F.count(F.lit(1)).alias("n"))
-        .withColumn("cq", F.expr("s DIV n"))
-        .groupBy("fine_id")
-        .agg(F.array_sort(F.collect_list(F.struct("d", "cq"))).alias("a"))
-        .select("fine_id", F.expr("transform(a, p -> p.cq)").alias("fqv1"))
-    )
+    f1 = _int_mean(af, "fine_id", "fqv1")
     # refined fine codebook: K rows, consumed by the final re-assignment
-    # AND (in ann_ivf_trained) the probe ranking — persist like the rest
+    # AND (in _route) the probe ranking — persist like the rest
     # of the codebook tables
     f1cell = tracked_persist(f1.join(fine.select("fine_id", "coarse_id"), "fine_id"))
     final = _nearest(

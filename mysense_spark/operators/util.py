@@ -165,13 +165,3 @@ def sql_std(e: str, nd: int = 6) -> str:
     var = f"(({s2} - {s1} * {s1} / {n}) / ({n} - 1))"
     return f"CASE WHEN {n} > 1 THEN {sql_ieee_round(f'sqrt(greatest({var}, 0.0))', nd)} ELSE NULL END"
 
-
-def stddev_null(col) -> Column:
-    """Sample stddev with SQL NULL semantics: Spark's stddev_samp yields NaN
-    for 1-element groups where ANSI engines (DuckDB) yield NULL."""
-    s = F.stddev(col)
-    return F.when(F.isnan(s), F.lit(None).cast("double")).otherwise(s)
-
-
-def nan_to_null(c: Column) -> Column:
-    return F.when(F.isnan(c), F.lit(None).cast("double")).otherwise(c)

@@ -13,21 +13,29 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def _modules():
-    from .operators import relational, timeseries
+    # Imported directly, not under a try: every module is part of the
+    # package, so a module that fails to import must fail the registry
+    # instead of silently dropping its queries from the gate.
+    from .operators import (
+        dedup,
+        geo,
+        indices,
+        ingest,
+        multimodal,
+        qc,
+        regression,
+        relational,
+        sampling,
+        similarity,
+        text,
+        timeseries,
+    )
 
-    mods = []
     # Module order is deliberate: the driver correctness gate checks the
     # first N registry entries, so modules whose queries were not yet
     # driver-verified (round-1 gate stopped at 50) come first; the
     # long-proven relational/timeseries bulk rotates to the back.
-    for name in ("ingest", "geo", "dedup", "similarity", "text", "multimodal", "sampling", "qc", "regression", "indices"):
-        try:
-            mod = __import__(f"mysense_spark.operators.{name}", fromlist=[name])
-            mods.append(mod)
-        except ImportError:
-            pass
-    mods += [relational, timeseries]
-    return mods
+    return [ingest, geo, dedup, similarity, text, multimodal, sampling, qc, regression, indices, relational, timeseries]
 
 
 # Queries hoisted to the front of the registry. The driver's

@@ -191,6 +191,20 @@ def test_caqi_breakpoints_match_citeair_published_values(spark):
     assert _eval_spark_piecewise(spark, [10.0], CAQI_BREAKPOINTS["pm25"], CAQI_CAP)[10.0] == pytest.approx(16.66666667, abs=5e-8)
 
 
+def test_piecewise_rounds_like_its_sql_twin_on_decimal_ties(spark):
+    """Values whose shortest decimal form ends in a 5 at the 9th place:
+    a half-up round of that decimal string and a round of the binary
+    double land one 1e-8 step apart. Through an identity segment the
+    index IS the value, so the Spark builder and its SQL twin must
+    return the same double."""
+    identity = [(0.0, 1000.0, 0.0, 1000.0)]
+    ties = [537.866537445, 570.968281515, 322.355350555]
+    got_s = _eval_spark_piecewise(spark, ties, identity, 1000.0)
+    got_d = _eval_duckdb_piecewise(ties, identity, 1000.0)
+    for c in ties:
+        assert got_s[c] == got_d[c], (c, got_s[c], got_d[c])
+
+
 def test_aqhi_closed_form_matches_environment_canada(spark):
     """AQHI = (1000/10.4) * sum_p (exp(beta_p * c_p) - 1), capped at 11 —
     computed here with math.exp from the published coefficients."""

@@ -55,3 +55,14 @@ def test_gate_tool_refuses_a_non_directory_sf_dir(tmp_path):
         assert out.returncode == 2, (arg, out.returncode, out.stdout[-500:], out.stderr[-500:])
         assert "usage: python tools/run_oracle_gate.py" in out.stderr
         assert "PATH_NOT_FOUND" not in out.stdout and "entry rows" not in out.stdout
+
+
+def test_caqi_index_matches_oracle_on_benchmark_events(spark, tmp_path):
+    """caqi_index against its oracle on the benchmark's seeded events
+    (20k rows, the sensor_corpus shape): its piecewise sub-indices land
+    on 8-decimal ties the shipped test data does not contain."""
+    from perfbench.gen_tables import write_tables
+
+    sf = write_tables(str(tmp_path / "tables"), seed=3, n_events=20_000, n_docs=10, n_vecs=10)
+    res = check_query(spark, "caqi_index", sf, float_tol=0.0)
+    assert res.ok, res.detail

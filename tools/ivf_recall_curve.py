@@ -70,7 +70,6 @@ def main() -> None:
 
     from mysense_spark.operators.similarity import (
         _N_CENTROIDS,
-        _ann_ivf_trained,
         _fixture_centroids,
         _two_level_parts,
         _vectors,
@@ -401,10 +400,7 @@ def main() -> None:
     curve = []
     for nprobe in nprobes:
         t0 = time.monotonic()
-        if centroids is not None:
-            searched = ann_ivf_search(vecs, nprobe=nprobe, centroids=centroids)
-        else:
-            searched = _ann_ivf_trained(vecs, nprobe=nprobe, parts=parts)
+        searched = ann_ivf_search(vecs, nprobe=nprobe, centroids=centroids, parts=parts)
         ivf = {(r["query_id"], r["cand_id"]) for r in searched.collect()}
         sec = time.monotonic() - t0
         recall = len(exact & ivf) / n_exact
