@@ -26,19 +26,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 _TRACKED: list[DataFrame] = []
-_MEMOS: list[dict] = []
-
-
-def query_memo() -> dict:
-    """A module-level memo that the registry empties at every query
-    entry: it may serve a repeat WITHIN one query invocation, never a
-    result carried into the next (a cross-invocation result cache makes
-    a re-run time the lookup, not the computation). Operator modules
-    create their memos here, so clearing them needs no import of the
-    operators."""
-    memo: dict = {}
-    _MEMOS.append(memo)
-    return memo
 
 
 def begin_query(name: str) -> None:
@@ -52,11 +39,9 @@ def begin_query(name: str) -> None:
     the kmeans directory cache and reverted in b891584. Every query
     invocation now starts cache-cold; persists still live through the
     invocation's own collect (released at the NEXT entry), which is all
-    the within-query reuse they exist for. Every `query_memo` is
-    emptied too. `name` labels the call site only."""
+    the within-query reuse they exist for. `name` labels the call site
+    only."""
     release_tracked()
-    for memo in _MEMOS:
-        memo.clear()
 
 
 def tracked_persist(df: DataFrame) -> DataFrame:

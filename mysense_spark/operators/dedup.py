@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import query_memo, tracked_persist
+from ..cache import tracked_persist
 from ..io import load
 
 _WORD_RE = "[a-z0-9]+"
@@ -719,34 +719,12 @@ _CC_MAX_ITERS = 64  # safety valve only — the loop breaks on convergence;
 # 64 covers any plausible near-dup chain (the oracle resolves the full
 # closure, so an unconverged component would be a gate red)
 
-# one-entry memo for the converged label table, keyed by (application,
-# sf_dir): the table is localCheckpoint-materialized (tiny — one row per
-# clustered doc) and lineage-free, so holding the reference costs a few
-# KB. It is a `query_memo`, emptied at every registry entry: it spares a
-# second clustering only within one query invocation and never serves a
-# result to the next query (dedup_keep_best recomputes the clustering
-# neardup_clusters built, so each query's time is its own computation).
-_LABELS_MEMO: dict[tuple[str, str], DataFrame] = query_memo()
-
 
 def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Converged Hash-Min label table (doc_id, label) over the verified
     MinHash-LSH pair graph — the shared core of q_neardup_clusters and
     q_dedup_keep_best (see q_neardup_clusters' docstring for the
     algorithm and its at-scale story)."""
-    # Memoize only in local mode: the memoized table is a localCheckpoint
-    # whose blocks have NO lineage to recompute from — on a multi-executor
-    # cluster a reclaimed executor would make every later memo hit fail
-    # with an unrecoverable missing-block error. Locally (one JVM, the
-    # gate/bench/pytest sweeps) the blocks live exactly as long as the
-    # process, so the reuse is safe; on a cluster, recompute (or persist
-    # the labels to a reliable table between queries).
-    use_memo = spark.sparkContext.master.startswith("local")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if use_memo:
-        hit = _LABELS_MEMO.get(key)
-        if hit is not None:
-            return hit
     pairs = q_minhash_lsh_pairs(spark, sf_dir).select("d1", "d2")
     edges = (
         pairs.union(pairs.select(F.col("d2").alias("d1"), F.col("d1").alias("d2")))
@@ -783,9 +761,6 @@ def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         labels = new_labels
         if changed == 0:
             break
-    if use_memo:
-        _LABELS_MEMO.clear()
-        _LABELS_MEMO[key] = labels
     return labels
 
 
@@ -875,8 +850,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     window rank — both on keys already produced by the clustering;
     cluster sizes are small (near-dup components), so the window
     partition is bounded. The converged label table is computed here,
-    not taken from an earlier q_neardup_clusters call (the
-    _cluster_labels memo is emptied at every query entry).
+    not taken from an earlier q_neardup_clusters call.
     """
     from pyspark.sql import Window
 

@@ -46,36 +46,6 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def drift_shift(vecs: DataFrame, alpha: float, id_offset: int) -> DataFrame:
-    """Deterministically shift a vector population toward the all-ones
-    direction and re-id it — the synthetic distribution drift the
-    IVFADC append-recall probe measures (tools/ivfadc_drift_probe.py):
-    v' = normalize(alpha * v + (1 - alpha) * u), u = 1/sqrt(d). Pure
-    column math on the input parquet (no RNG, no time), so the shifted
-    population is bit-identical on every run — pinned in pytest, which
-    is what makes the drift MEASUREMENT reproducible rather than a
-    one-off anecdote. alpha=1 is the identity direction-wise; smaller
-    alpha pulls the population harder into a region the frozen coarse/
-    PQ codebook never trained on."""
-    u = 1.0 / 8.0  # 1/sqrt(64), the fixed drift direction's component
-    mixed = F.expr(f"transform(v, x -> x * CAST({alpha} AS DOUBLE)"
-                   f" + CAST({(1.0 - alpha) * u} AS DOUBLE))")
-    nrm = F.sqrt(
-        F.aggregate(
-            F.expr("transform(mv, x -> x * x)"), F.lit(0.0), lambda a, x: a + x
-        )
-    )
-    return (
-        vecs.select((F.col("vec_id") + id_offset).alias("vec_id"), mixed.alias("mv"))
-        .select("vec_id", "mv", nrm.alias("nrm"))
-        .select(
-            "vec_id",
-            F.expr("transform(mv, x -> x / nrm)").alias("v"),
-            F.lit(1.0).alias("norm"),
-        )
-    )
-
-
 _SQL_VECTORS = """
   SELECT vec_id, label, embedding::DOUBLE[] AS v,
          sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS norm
@@ -2231,7 +2201,7 @@ def _ensure_index(final: str, build_fn) -> str:
     writing deep inside codes/cent_id=*/ for >1 h would have been
     swept under the old rule — now any file the builder touches keeps
     its tree alive). A final dir WITHOUT a marker is an explicitly
-    invalidated index (ivfadc_index_append retires the marker so the
+    invalidated index (every index append retires the marker so the
     content-keyed cache misses) — removed and rebuilt, never trusted."""
     import glob
     import os
@@ -2242,7 +2212,7 @@ def _ensure_index(final: str, build_fn) -> str:
     if os.path.exists(marker):
         return final
     if os.path.exists(os.path.join(final, "_INDEX_APPENDED")):
-        # EXPLICITLY invalidated (ivfadc_index_append retired the
+        # EXPLICITLY invalidated (an index append retired the
         # marker): remove and rebuild. Only this marked state is ever
         # deleted — a dir with neither marker still takes the
         # build/rename/re-check path below, so a concurrent builder's
@@ -2267,6 +2237,22 @@ def _ensure_index(final: str, build_fn) -> str:
         if not os.path.exists(marker):  # not a byte-equivalent winner
             raise
     return final
+
+
+def _retire_ready_marker(index_path: str) -> None:
+    """The cache-coherence step every index append takes BEFORE it
+    mutates a persisted index: rename _INDEX_READY to _INDEX_APPENDED.
+    An appended index is no longer a pure function of the corpus
+    fingerprint its directory name encodes, so the content-keyed
+    `ensure_*` must treat it as a cache miss and rebuild — a graded
+    `*_persisted` run never serves vectors the oracle does not see. A
+    dir without the marker (a build in progress, an explicit-path
+    index) is left as it is; compaction never calls this."""
+    import os
+
+    marker = os.path.join(index_path, "_INDEX_READY")
+    if os.path.exists(marker):
+        os.replace(marker, os.path.join(index_path, "_INDEX_APPENDED"))
 
 
 def ensure_ivfadc_index(spark: SparkSession, sf_dir: str) -> str:
@@ -2304,11 +2290,7 @@ def ivfadc_index_append(spark: SparkSession, new_vecs: DataFrame, index_path: st
     (searching the appended index by explicit path, as the pytest and
     a real nightly-ingest deployment do) are unaffected: the search
     never consults the marker."""
-    import os
-
-    marker = os.path.join(index_path, "_INDEX_READY")
-    if os.path.exists(marker):
-        os.replace(marker, os.path.join(index_path, "_INDEX_APPENDED"))
+    _retire_ready_marker(index_path)
     directory = spark.read.parquet(f"{index_path}/directory")
     cents = spark.read.parquet(f"{index_path}/cents")
     membership = ivf_membership(new_vecs, directory).select("vec_id", "cent_id")
@@ -2419,7 +2401,10 @@ def write_srp_partitioned(
     of everything already written — incremental index maintenance is
     ONE append of the new rows' signatures (the streaming-corpus
     niche; an IVF layout would first have to re-validate its codebook
-    against the drifted corpus).
+    against the drifted corpus). An append retires the target's
+    _INDEX_READY marker first (_retire_ready_marker), like every index
+    append, so a content-keyed ensure_srp_index dir that gained rows
+    is rebuilt instead of served.
 
     Small-files posture: signatures repartition by tbl before the
     write, so each tbl directory gains at most ONE file per append. A
@@ -2430,6 +2415,8 @@ def write_srp_partitioned(
     from the corpus archive — signatures are a pure function of the
     vectors, so a rebuild is always row-equivalent to the appends it
     replaces — or in-place `compact_srp_index`."""
+    if append:
+        _retire_ready_marker(path)
     _write_srp_sigs(
         srp_signatures(vecs, n_tables, n_bits),
         path,
@@ -2894,8 +2881,8 @@ def ann_sq8_search(
     fence like the probe-list collects: the quantizer state must
     become plan literals so the code scan is ONE projection with no
     join, which is the point of SQ at 100 TB. `parts` reuses a trained
-    (params_rows, codes) pair across a sweep (tools/sq8_probe.py's
-    warm leg) — without it every call re-derives both, the same
+    (params_rows, codes) pair across a sweep (the warm leg of the SQ8
+    probe in SCALING.md) — without it every call re-derives both, the same
     retrain-per-run grading shape as ann_pq."""
     q, cand = _sq8_scan_sides(vecs, parts)
     scored = (
@@ -2967,7 +2954,7 @@ def _sq8_dequant(codes: DataFrame, params: list) -> DataFrame:
     """Dequantize a codes stream to (.. , dq, dn). Norms and
     dequantization are PER-ROW facts, computed once per candidate row —
     never inside the Q x N pair projection (the first draft recomputed
-    them per pair: a 3x scan-cost tax tools/sq8_probe.py measured; sqrt
+    them per pair: a 3x scan-cost tax measured in SCALING.md r15; sqrt
     of the same integer sum is value-identical wherever it runs, so the
     oracle — which writes the norms inline per pair — still
     hash-matches). Called AFTER any cell prune so only surviving rows
@@ -3082,8 +3069,8 @@ def ann_ivfsq_search(
     ride a cell-partitioned layout exactly like write_ivfadc_index,
     turning the probe into a directory prune), dequantization stays a
     per-row affine map in whole-stage codegen, and recall is bounded
-    by routing — SQ8's near-lossless ranking (recall 1.0 in
-    tools/sq8_probe.py) means the cell prune, not the quantizer, is
+    by routing — SQ8's near-lossless ranking (recall 1.0 in the
+    SCALING.md r15 table) means the cell prune, not the quantizer, is
     the accuracy knob. The probe joins run on the RAW codes stream and
     dequantization happens after them (r15 review: the first cut
     dequantized all N rows before the prune, making the scan
@@ -3231,9 +3218,7 @@ def sq8_index_append(spark: SparkSession, new_vecs: DataFrame, index_path: str) 
             f"would silently corrupt ranking — rebuild the index "
             f"(ensure_sq8_index after a corpus refresh) instead"
         )
-    marker = os.path.join(index_path, "_INDEX_READY")
-    if os.path.exists(marker):
-        os.replace(marker, os.path.join(index_path, "_INDEX_APPENDED"))
+    _retire_ready_marker(index_path)
     mns, spans = _sq8_literals(params)
     sq8_encode(new_vecs, mns, spans).write.mode("append").parquet(
         os.path.join(index_path, "codes")
@@ -3416,23 +3401,10 @@ def modulo_centroids(vecs: DataFrame, target_cluster_size: int = _SEM_TARGET_CLU
 _TC_SCALE = 1_000_000  # the kmeans_train 1e-6 integer grid
 _TC_FINE_MOD = 64  # fine seed rate: K ≈ N/64, expected cell ≈ 64
 _TC_GROUP = 64  # fine seeds per coarse stratum: K1 ≈ K/64 ≈ N/4096
-# route stride (r9): K2 ≈ K1/route_group, so with the default the route
-# level is a SINGLE cell until K1 ≈ 10^5 coarse cells (N ≈ 4×10^8
-# vectors) — below that the construction reduces EXACTLY to the
-# two-level form (pytest-pinned), above it the vec→coarse scan is
-# route-pruned instead of growing as N×K1
+# route stride of the graded DuckDB mirror (_sql_two_level_membership
+# only): its route level is one cell below N ≈ 4×10^8 vectors, which is
+# why the mirror equals the two-level Spark construction
 _TC_ROUTE_GROUP = 100_000
-# broadcast ceiling for the coarse-candidate payload (r10): the fused
-# routed argmin ships ALL K1 coarse candidates to every task, and K1 ≈
-# N/4096 — ~1 GB of int64 grid vectors at N = 10^10. Above this bound
-# the assignment switches to the SHUFFLE-ROUTED tier (route pick by a
-# K2-row broadcast, then a salted route_id equi-join whose per-task
-# payload is ONE route cell ≈ route_group candidates), so no O(N)
-# broadcast exists anywhere in the trained lineage at any N. 10^5
-# 64-dim int64 vectors ≈ 100 MB — the same comfort bound the route
-# stride itself encodes, so with default strides the tiers flip at the
-# same scale the route level goes multi-cell.
-_TC_BCAST_K1 = 100_000
 _QV_EXPR = f"transform(v, x -> CAST(floor(x * {float(_TC_SCALE)!r}) AS BIGINT))"
 
 
@@ -3475,8 +3447,7 @@ def _nearest(
     (dist, id) — (dist, id) is unique per row×candidate, so the payload
     never influences the comparison), saving the join-back to re-attach
     them. For codebook tables small enough to broadcast, use
-    _nearest_bcast / _nearest_in_cell — same distance, same tie-break,
-    zero shuffle."""
+    _nearest_bcast — same distance, same tie-break, zero shuffle."""
     c = F.broadcast(cands) if bcast else cands
     joined = rows.crossJoin(c) if on is None else rows.join(c, on)
     keep = keep or []
@@ -3520,137 +3491,6 @@ def _nearest_bcast(
     )
 
 
-def _nearest_routed(
-    rows: DataFrame, rvec: str, route: DataFrame, cands: DataFrame, cid: str, cvec: str
-) -> DataFrame:
-    """The fused routed argmin: nearest route anchor, then nearest
-    candidate WITHIN that route cell — both picked inline in ONE map
-    stage over ONE broadcast (the route cells with their candidate
-    arrays). Semantically identical to the two-step form (_nearest_bcast
-    to the route, then _nearest pruned on the cell) — pinned at the
-    kernel level by test_broadcast_argmin_matches_nearest and at the
-    construction level by the flat-reduction and multi-cell oracle-
-    parity tests. Only NON-EMPTY route cells are broadcast, which
-    cannot change any argmin: an empty cell only arises when two route
-    anchors share an exact qv (each anchor is its own candidate
-    otherwise), and the (dist, id) tie-break already makes the
-    smaller-id twin win every row the empty twin could have claimed.
-
-    The chosen cell's candidate array rides through the route argmin as
-    struct payload — (dist, route_id) is unique per row×cell, so the
-    payload never influences the comparison and the route array is
-    traversed ONCE per row."""
-    grouped = cands.groupBy("route_id").agg(
-        F.collect_list(F.struct(F.col(cid).alias("i"), F.col(cvec).alias("q"))).alias("cs")
-    )
-    cells = route.join(grouped, "route_id").agg(
-        F.collect_list(F.struct("route_id", "rqv", "cs")).alias("_rc")
-    )
-    l2r = (
-        f"aggregate(zip_with({rvec}, r.rqv, (x, y) -> (x - y) * (x - y)),"
-        f" CAST(0 AS BIGINT), (a, x) -> a + x)"
-    )
-    return (
-        rows.crossJoin(F.broadcast(cells))
-        .withColumn(
-            "_cs",
-            F.expr(
-                f"array_min(transform(_rc, r -> struct({l2r} AS dist,"
-                f" r.route_id AS rid, r.cs AS cs))).cs"
-            ),
-        )
-        .withColumn(cid, _argmin_expr(rvec, "_cs"))
-        .drop("_rc", "_cs")
-    )
-
-
-def _stratum_count(stride: int) -> Column:
-    """Rows the given md5 stride would select (plus the anchor) — the
-    two-int codebook stats (K1, K2) behind the r10 tier decision."""
-    return F.sum(((F.col("h") % stride == 0) | F.col("is_anchor")).cast("long"))
-
-
-def _nearest_routed_shuffle(
-    rows: DataFrame,
-    rvec: str,
-    route: DataFrame,
-    cands: DataFrame,
-    cid: str,
-    cvec: str,
-    rid: str = "vec_id",
-) -> DataFrame:
-    """The SHUFFLE-ROUTED argmin — the above-broadcast-scale tier of
-    _nearest_routed (r10): semantically identical (same route pick, same
-    per-cell argmin, same (dist, id) tie-breaks — pinned row-for-row by
-    test_trained_codebook_shuffle_tier_matches_broadcast), but the K1
-    coarse candidates are never broadcast:
-
-    1. row → nearest route anchor: a map-side argmin over the K2-row
-       route table (K2 ≈ K1/route_group — broadcastable until
-       N ≈ 4×10^13, the same bound trained_codebook documents).
-    2. row → nearest candidate within its route cell: candidates are
-       grouped into ONE array row per cell (~route_group vectors ≈
-       100 MB at default strides) and equi-joined on (route_id, salt).
-       The salt replicates each cell array defaultParallelism ways —
-       K2 keys alone would put all N/K2 rows of a cell through one
-       task; salted, per-task state is ONE cell array + a slice of its
-       rows, bounded by route_group REGARDLESS of K1 or N. The
-       replication cost is K2·salts cell copies through the exchange —
-       at the tier boundary that is ~salts×100 MB, the price that
-       replaces an O(K1)=O(N/4096) broadcast to every executor.
-
-    The salt is a deterministic hash of the row id, so the physical
-    distribution is stable across retries; it never touches the argmin.
-    Returns rows + the new `cid` column, every row column kept (parity
-    with _nearest_routed)."""
-    salts = rows.sparkSession.sparkContext.defaultParallelism
-    routed = _nearest_bcast(rows, route, rvec, "route_id", "rqv")
-    grouped = cands.groupBy("route_id").agg(
-        F.collect_list(F.struct(F.col(cid).alias("i"), F.col(cvec).alias("q"))).alias("_cs")
-    )
-    cells = grouped.select(
-        "route_id",
-        "_cs",
-        F.explode(F.sequence(F.lit(0), F.lit(salts - 1))).alias("_salt"),
-    )
-    salted = routed.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(rid)), F.lit(salts)).cast("int")
-    )
-    return (
-        salted.join(cells, ["route_id", "_salt"])
-        .withColumn(cid, _argmin_expr(rvec, "_cs"))
-        .drop("_cs", "_salt", "route_id")
-    )
-
-
-def _nearest_coarse(
-    rows: DataFrame,
-    cands: DataFrame,
-    routing: tuple[DataFrame, DataFrame, bool, bool] | None,
-) -> DataFrame:
-    """ONE definition of the trained codebook's coarse-argmin tier
-    switch, used for both seed→coarse (trained_codebook) and vec→coarse
-    (_two_level_parts), so the two always take the same physical tier:
-    rows (…, qv) + the `coarse_id` of the nearest candidate among
-    `cands` (coarse_id, cqv, …). `routing` is trained_codebook's
-    (route, croute, shuffle_tier, single_cell) tuple:
-    - None (the test-only flat build) or a single route cell (which
-      would prune nothing): the broadcast argmin over every candidate;
-    - K1 above the broadcast ceiling: the salted shuffle-routed join
-      (no O(K1) broadcast at any N);
-    - otherwise the fused one-broadcast routed argmin."""
-    if routing is None:
-        return _nearest_bcast(rows, cands, "qv", "coarse_id", "cqv")
-    route, croute, shuffle_tier, single_cell = routing
-    if shuffle_tier:
-        return _nearest_routed_shuffle(
-            rows, "qv", route, cands.join(croute, "coarse_id"), "coarse_id", "cqv"
-        )
-    if single_cell:
-        return _nearest_bcast(rows, cands, "qv", "coarse_id", "cqv")
-    return _nearest_routed(rows, "qv", route, cands.join(croute, "coarse_id"), "coarse_id", "cqv")
-
-
 def _int_mean(members: DataFrame, cid: str, out: str) -> DataFrame:
     """One integer-grid Lloyd update: (cid, qv) member rows -> (cid,
     out) where `out` is the per-dimension integer mean (s DIV n — both
@@ -3668,26 +3508,15 @@ def _int_mean(members: DataFrame, cid: str, out: str) -> DataFrame:
 
 
 def trained_codebook(
-    vecs: DataFrame,
-    route_group: int | None = None,
-    fine_mod: int = _TC_FINE_MOD,
-    group: int = _TC_GROUP,
-    flat: bool = False,
-    bcast_k1: int | None = None,
-) -> tuple[DataFrame, DataFrame, tuple[DataFrame, DataFrame, bool, bool] | None]:
-    """Train the two-level codebook: returns (coarse, fine, routing)
-    where `coarse` is (coarse_id, cqv) — Lloyd-refined integer-grid
-    coarse centroids — `fine` is (fine_id, coarse_id, fqv) — the fine
-    seed vectors with their coarse cell — and `routing` is
-    (route, croute, shuffle_tier, single_cell): the self-routing third
-    level plus the r10 tier flags, resolved here ONCE so the seed→coarse
-    assignment below and the vec→coarse assignment in _two_level_parts
-    take the same physical tier (r9: always built;
-    `route_group=None` means the default `_TC_ROUTE_GROUP` stride —
-    routing is None only under the test-only `flat=True` build).
+    vecs: DataFrame, fine_mod: int = _TC_FINE_MOD, group: int = _TC_GROUP
+) -> tuple[DataFrame, DataFrame]:
+    """Train the two-level codebook: returns (coarse, fine) where
+    `coarse` is (coarse_id, cqv) — Lloyd-refined integer-grid coarse
+    centroids — and `fine` is (fine_id, coarse_id, fqv) — the fine seed
+    vectors with their coarse cell.
 
-    Construction, every step lazy, ORDER-FREE, and engine-mirrorable —
-    each level is an md5-stride SUBSET of the one below (no rank window
+    Construction, ORDER-FREE and engine-mirrorable — each level is an
+    md5-stride SUBSET of the one below (no rank window
     anywhere, so no stage sorts codebook rows through one task):
     1. FINE SEEDS: corpus rows whose md5(vec_id) bucket ≡ 0 (mod
        fine_mod) — K ≈ N/64 without a driver count and without the
@@ -3698,68 +3527,25 @@ def trained_codebook(
        hash rule one stratum up (a pure filter, embarrassingly parallel;
        r8 used a rank window here — the one single-partition stage in
        the training lineage, removed in r9).
-    3. ROUTE ANCHORS (always on): seeds with md5 ≡ 0 (mod
-       fine_mod·group·route_group) ∪ anchor — a SUBSET of the coarse
-       inits, so each route cell contains its own anchor as a coarse
-       candidate and every pruned join below is total.
-    4. SEED→COARSE assignment pruned through the route level (seed→route
-       K×K2 anchor scan, then ~group·route_group/…, in practice a few
-       coarse candidates per seed within its route cell; each init
-       attracts itself at distance 0 so no coarse cell is empty), then
-       one Lloyd refinement: coarse centroid = per-dimension integer
-       mean of its member seeds. The init assignment defines the
+    3. SEED→COARSE assignment: a map-side argmin over all K1 inits (each
+       init attracts itself at distance 0, so no coarse cell is empty),
+       then one Lloyd refinement: coarse centroid = per-dimension
+       integer mean of its member seeds. The init assignment defines the
        partition; the refined centroid represents it.
 
-    With the default strides K2 ≈ K1/10^5: the route level is a single
-    cell until K1 ≈ 10^5 coarse cells (N ≈ 4×10^8 vectors), where the
-    construction REDUCES to the two-level one (the equivalence is
-    pytest-pinned exactly, not just approximately — a one-cell route
-    prunes nothing, so every argmin sees the identical candidate set);
-    beyond that the route level caps both remaining scan terms —
-    seed→coarse at K×K2 and _two_level_parts' vec→coarse at N×K2 —
-    instead of letting them grow as K×K1 / N×K1. The coarse level
-    recurses — the same trick one level up — so recursing to depth
-    log_{64}(N) makes the whole construction O(N log N); one route
-    level covers every deployment until K2 itself reaches broadcast
-    scale (N ≈ 4×10^13).
+    Two levels, one physical tier: both coarse argmins (seed→coarse
+    here, vec→coarse in _two_level_parts) broadcast all K1 coarse
+    vectors to every task; the only driver action is the count that
+    materializes the seed cache, and nothing chooses a plan. The
+    cost is the broadcast itself: K1 ≈ N/4096 64-dim int64 vectors,
+    about 100 MB at N ≈ 4×10^8. No dataset, workload or machine here
+    comes near that (the corpora hold 500–2,000 vectors); a corpus that
+    does needs a routing level above the coarse one (SCALING.md keeps
+    the measurements of the removed route and shuffle tiers).
 
-    Totality holds level by level: a non-empty route cell's anchor
-    self-assigns (distance 0, ties to the smallest id — identical-qv
-    anchors collapse into the smallest one, leaving the duplicates
-    empty, never partially filled), and that anchor is a coarse init,
-    so every seed's and every vector's route cell offers ≥1 coarse
-    candidate.
-
-    Physical tiers (r10 — same math, three plan shapes; which one runs
-    is decided here by ONE bounded control-plane aggregate over the
-    persisted seeds, yielding K1 = coarse candidates and K2 = route
-    cells — two ints, the codebook analogue of AQE's stats-driven join
-    selection, and the only driver-side action in the training):
-    - K1 ≤ bcast_k1, K2 == 1: the route level prunes nothing — the
-      routed argmin is ELIDED to a plain broadcast argmin over the K1
-      candidates (the flat two-level shape; exact by the reduction pin).
-    - K1 ≤ bcast_k1, K2 > 1: the fused one-broadcast routed argmin
-      (_nearest_routed).
-    - K1 > bcast_k1: the shuffle-routed tier (_nearest_routed_shuffle)
-      — no O(K1) broadcast anywhere; per-task payload is one route
-      cell. All three are pinned row-identical on forced fixtures.
-
-    `fine_mod` / `group` / `route_group` expose the sampling strides so
-    tests can force genuinely multi-level codebooks on small fixtures;
-    production uses the defaults. `bcast_k1` overrides the broadcast
-    ceiling (_TC_BCAST_K1) — tests force the shuffle tier with
-    bcast_k1=0. `flat=True` builds the two-level form with no route
-    level — test-only, the reference side of the exact-reduction pin."""
-    if route_group is None:
-        route_group = _TC_ROUTE_GROUP
-    if bcast_k1 is None:
-        bcast_k1 = _TC_BCAST_K1
-    if not flat and route_group < 1:
-        raise ValueError(
-            f"route_group must be >= 1, got {route_group!r}: a non-positive "
-            f"stride would NULL out the route modulo and silently empty "
-            f"the membership"
-        )
+    `fine_mod` / `group` expose the sampling strides so tests can force
+    multi-cell coarse levels on small fixtures; production uses the
+    defaults."""
     qv = F.expr(_QV_EXPR)
     base = vecs.select("vec_id", qv.alias("qv"), _md5u32(F.col("vec_id")).alias("h"))
     sel = base.where(F.col("h") % fine_mod == 0).select(
@@ -3772,95 +3558,54 @@ def trained_codebook(
     seed_ids = (
         sel.unionByName(anchor).groupBy("vec_id").agg(F.max("is_anchor").alias("is_anchor"))
     )
-    # persist the seed set (K ≈ N/64 slim rows): it roots every level
-    # above — unpersisted, Catalyst re-expands the md5-scan+union
-    # subtree into each consumer and the training replans ~5×. This is
-    # the ONLY training table built from the corpus, and it CARRIES the
-    # anchor as a flag column, so every coarser level is a pure filter
-    # over this cache — no per-level broadcast, join, or window (r9 —
-    # r8 ranked the seeds through a single-partition window instead;
-    # the argmins above still build K-row broadcast arrays, the same
-    # movement any broadcast exchange performs)
+    # persist the seed set (K ≈ N/64 slim rows): it has two consumers,
+    # the coarse inits and the seed→coarse argmin — unpersisted,
+    # Catalyst re-expands the md5-scan+union subtree into each. It
+    # CARRIES the anchor as a flag column, so the coarse level is a pure
+    # filter over this cache — no broadcast, join, or window (r9 — r8
+    # ranked the seeds through a single-partition window instead)
     seeds = tracked_persist(base.join(seed_ids, "vec_id"))
-
-    def stratum(rows: DataFrame, stride: int) -> DataFrame:
-        # one hash rule for every level: md5 bucket ≡ 0 (mod stride),
-        # plus the anchor — each coarser stride divides the finer one,
-        # so the selection is a CHAIN of subsets and stays order-free
-        return rows.where((F.col("h") % stride == 0) | F.col("is_anchor"))
-
-    # coarse inits: K1 rows, a pure filter over the cached seeds (WITH
-    # h/is_anchor so the route level below is one more filter) — cheap
-    # enough to recompute per consumer, no persist boundary
-    c0 = stratum(seeds, fine_mod * group).select(
-        F.col("vec_id").alias("coarse_id"), F.col("qv").alias("cqv"), "h", "is_anchor"
+    # materialize the seed cache before its consumers are planned, so
+    # their joins are planned from its measured size, not the plan
+    # estimate: without this count several broadcast joins downstream
+    # flip their build side (plans/two_level_flat/). One job over rows
+    # the first consumer would compute anyway; it chooses nothing
+    seeds.count()
+    # coarse inits: K1 rows, the same hash rule one stratum up (each
+    # coarser stride divides the finer one, so the selection is a
+    # subset and stays order-free) — a filter over the cached seeds
+    c0 = seeds.where((F.col("h") % (fine_mod * group) == 0) | F.col("is_anchor")).select(
+        F.col("vec_id").alias("coarse_id"), F.col("qv").alias("cqv")
     )
-    routing: tuple[DataFrame, DataFrame, bool, bool] | None = None
-    if not flat:
-        # tier decision: K1 (coarse candidates = would-be broadcast
-        # payload) and K2 (route cells) in ONE bounded stats aggregate
-        # over the persisted seeds — two ints, the codebook analogue of
-        # AQE's stats-driven join selection, and an AUDITED exemption
-        # from the no-driver-actions plan contract (the counts are
-        # exactly the stratum filters below, so nothing new is scanned
-        # and the job doubles as the seed-cache materialization every
-        # consumer reuses)
-        s1, s2 = fine_mod * group, fine_mod * group * route_group
-        k1, k2 = seeds.agg(_stratum_count(s1), _stratum_count(s2)).first()
-        # third level: the same hash rule one more stratum up — a SUBSET
-        # of the coarse inits (so each route cell contains its own
-        # anchor as a coarse candidate and the pruned joins below are
-        # total), derived as a filter over the CACHED c0, not a new scan
-        route = stratum(
-            c0.withColumnRenamed("coarse_id", "vec_id"), fine_mod * group * route_group
-        ).select(F.col("vec_id").alias("route_id"), F.col("cqv").alias("rqv"))
-        # coarse init → route cell: the coarse inits ARE seeds with the
-        # same pre-refinement qv, so the map-side argmin over the route
-        # table IS the seed→route assignment restricted to the init ids
-        # — one expression, no join, nothing to drift
-        croute = _nearest_bcast(c0, route, "cqv", "route_id", "rqv").select(
-            "coarse_id", "route_id"
-        )
-        # an EMPTY corpus sums to NULL, not 0 — keep the empty input
-        # flowing through to an empty (broadcast-tier) result instead
-        # of a TypeError at plan-build time
-        routing = (route, croute, (k1 or 0) > bcast_k1, (k2 or 0) <= 1)
-    # seed → nearest coarse init on the tier _nearest_coarse picks (an
-    # anchor attracts itself at 0, so every seed's route cell offers ≥1
-    # coarse candidate in every tier). Persisted: a0 is the K-row
-    # trained fine codebook (it IS `fine` modulo renames) and its
-    # materialization absorbs the route / croute broadcast builds, which
-    # would otherwise re-execute in every downstream consumer. a0
-    # carries qv (map-derived), so the Lloyd refinement and the fine
-    # table need no join-back to seeds
-    a0 = tracked_persist(_nearest_coarse(seeds, c0, routing).select("vec_id", "qv", "coarse_id"))
+    # seed → nearest coarse init. Persisted: a0 is the K-row trained
+    # fine codebook (it IS `fine` modulo renames) and its
+    # materialization absorbs the c0 broadcast build, which would
+    # otherwise re-execute in every downstream consumer. a0 carries qv
+    # (map-derived), so the Lloyd refinement and the fine table need no
+    # join-back to seeds
+    a0 = tracked_persist(
+        _nearest_bcast(seeds, c0, "qv", "coarse_id", "cqv")
+        .select("vec_id", "qv", "coarse_id")
+    )
     # coarse has ONE consumer (the vec→coarse scoring in
     # _two_level_parts) — no persist boundary; fine (K rows) feeds the
-    # af equi-join AND f1cell, so it keeps its persist
+    # af equi-join AND f1cell
     coarse = _int_mean(a0, "coarse_id", "cqv")
     fine = a0.select(
         F.col("vec_id").alias("fine_id"), "coarse_id", F.col("qv").alias("fqv")
     )
-    return coarse, fine, routing
+    return coarse, fine
 
 
-def two_level_membership(
-    vecs: DataFrame,
-    route_group: int | None = None,
-    flat: bool = False,
-    bcast_k1: int | None = None,
-) -> DataFrame:
+def two_level_membership(vecs: DataFrame) -> DataFrame:
     """Cluster membership under the trained codebook with the PRUNED
     assignment join: (vec_id, v, norm, cent_id) where cent_id is the
     vector's refined fine cell.
 
     Assignment shape — the point of the whole construction:
-    1. vector → nearest coarse cell, SELF-ROUTED (r9): an N×K2 route
-       anchor scan (K2 ≈ K1/10^5 — a single cell until N ≈ 4×10^8, then
-       growing 10^5× slower than the coarse level) followed by a pruned
-       equi-join that scores only the route cell's coarse centroids —
-       no N×K1 term at any N, and the two-level reduction is exact
-       while the route level is one cell (see trained_codebook).
+    1. vector → nearest coarse cell: a map-side broadcast argmin over
+       the K1 ≈ N/4096 refined coarse centroids (the broadcast bound is
+       in trained_codebook's docstring).
     2. vector → nearest fine seed WITHIN its coarse cell: an equi-join
        on coarse_id (≈64 fine candidates per vector — ~64·N total work,
        LINEAR in N, vs the flat scan's N×K = N²/64; on the partitioned
@@ -3871,42 +3616,31 @@ def two_level_membership(
     Every coarse cell entering step 2 has ≥1 fine seed (each coarse init
     is its own seed) and every refined fine cell in step 3 had ≥1 member
     in step 2, so both pruned joins are total — no vector is dropped."""
-    _, _, final = _two_level_parts(vecs, route_group, flat=flat, bcast_k1=bcast_k1)
+    _, _, final = _two_level_parts(vecs)
     return vecs.join(final, "vec_id").select("vec_id", "v", "norm", "cent_id")
 
 
 def _two_level_parts(
-    vecs: DataFrame,
-    route_group: int | None = None,
-    fine_mod: int = _TC_FINE_MOD,
-    group: int = _TC_GROUP,
-    flat: bool = False,
-    bcast_k1: int | None = None,
+    vecs: DataFrame, fine_mod: int = _TC_FINE_MOD, group: int = _TC_GROUP
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Shared internals of the trained-codebook assignment: returns
     (vca, f1cell, final) — vector→coarse map, refined fine centroids
     with their coarse cell (fine_id, coarse_id, fqv1), and the final
     (vec_id, cent_id) membership. _route's trained probe ranking needs
-    f1cell; semdedup needs only the membership. The vec→coarse step
-    goes through the trained route level by default (r9 — see
-    trained_codebook); `route_group` overrides the stride, and the
-    test-only `flat=True` builds the unrouted two-level form for the
-    exact-reduction pin."""
-    coarse, fine, routing = trained_codebook(
-        vecs, route_group, fine_mod, group, flat=flat, bcast_k1=bcast_k1
-    )
+    f1cell; semdedup needs only the membership. Two levels, one tier:
+    vec→coarse is the same broadcast argmin trained_codebook runs for
+    the seeds. `fine_mod` / `group` are trained_codebook's strides."""
+    coarse, fine = trained_codebook(vecs, fine_mod, group)
     par = vecs.sparkSession.sparkContext.defaultParallelism
     # repartition BEFORE the broadcast scoring stages (the ivf_membership
     # parallelism lesson: inherit cores, not parquet file count)
     qvecs = vecs.select("vec_id", F.expr(_QV_EXPR).alias("qv")).repartition(par)
-    # vec → nearest refined coarse centroid on the SAME physical tier
-    # trained_codebook resolved for the seeds. The Lloyd-refined coarse
-    # centroids keep their INIT's route label (the routing is trained on
-    # inits; refinement moves centroids within their cell)
-    vca_plan = _nearest_coarse(qvecs, coarse, routing)
     # vca carries qv through (map-derived, so no qvecs join-back): ONE
     # persisted corpus-wide table replaces r8's two (qvecs + vca)
-    vca = tracked_persist(vca_plan.select("vec_id", "qv", "coarse_id"))
+    vca = tracked_persist(
+        _nearest_bcast(qvecs, coarse, "qv", "coarse_id", "cqv")
+        .select("vec_id", "qv", "coarse_id")
+    )
     af = _nearest(
         vca, fine, "vec_id", "qv", "fine_id", "fqv",
         on="coarse_id", bcast=False, keep=["qv"],
@@ -3997,16 +3731,20 @@ def _sql_two_level_membership(
     group: int = _TC_GROUP,
     route_group: int = _TC_ROUTE_GROUP,
 ) -> str:
-    """The trained-codebook membership CTE chain, mirroring
-    trained_codebook + two_level_membership step for step — including
-    the r9 order-free md5-stride level selection and the always-on
-    route level, so the oracle stays exact at ANY corpus size, not just
-    while the route level is a single cell (shared by
-    SQL_SEMDEDUP_TRAINED and the trained-IVF oracle). The strides are
-    parameters so the multi-cell routed construction can be
-    oracle-pinned on small fixtures (tight strides force several route
-    cells), not just at production strides where the gate-scale route
-    level is one cell."""
+    """The trained-codebook membership CTE chain: the DuckDB reference
+    for trained_codebook + _two_level_parts, shared by
+    SQL_SEMDEDUP_TRAINED and the trained-IVF oracle. It still builds a
+    route level (route, s_route, croute, v_route) that the Spark side
+    does not have. The two agree because the graded SQL has a single
+    route cell: the route stride fine_mod·group·route_group is
+    409,600,000 at the defaults, so a second cell needs a seed whose
+    md5 prefix is a non-zero multiple of it, and no graded corpus has
+    one (pytest-pinned on sf0.01 and sf0.1). One route cell prunes
+    nothing, so every argmin sees the full candidate set and the SQL
+    equals the flat Spark construction row for row. The strides are
+    parameters so tests can force multi-cell coarse levels on small
+    fixtures; they collapse the route level by passing a `route_group`
+    that puts the stride beyond the 32-bit hash range."""
     grid = f"list_transform(v, x -> CAST(floor(x * {float(_TC_SCALE)!r}) AS BIGINT))"
     h = "('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT"
     return f"""

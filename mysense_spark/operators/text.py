@@ -1820,7 +1820,7 @@ def _bpe_chain(
     final symbol table (word, cnt, seq) — consumed by bpe_encode as the
     learned tokenizer — and the per-step 1-row merge tables.
 
-    MERGE-COUNT BOUNDARY (r14, measured — tools/bpe_merge_sweep.py,
+    MERGE-COUNT BOUNDARY (r14, measured by a one-off merge sweep,
     table in SCALING.md): merge rounds are inherently SEQUENTIAL (each
     merge depends on the counts after the previous one — Sennrich 2016;
     no production trainer parallelizes across merges), so the loop is

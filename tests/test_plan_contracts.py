@@ -70,18 +70,16 @@ def test_operators_have_no_driver_actions():
     exemptions remain: the similarity rerank fence (a bounded
     limit(K+1).count() guard that RAISES on oversized query sets), the
     neardup label-propagation convergence probe (limit(1)-bounded), the
-    trained-codebook tier stats (r10: ONE two-int aggregate over the
-    already-persisted seed cache — the AQE-style physical-plan selection
-    between the broadcast and shuffle-routed assignment tiers; it scans
-    nothing the training would not materialize anyway), and the kmeans
-    directory materialization (r13: a K-row count over the
+    kmeans directory materialization (r13: a K-row count over the
     tracked_persist'd trained cell directory — the search compositions'
     first touches are several CONCURRENT broadcast-build jobs, and an
     unmaterialized cache lets each race through the full Lloyd lineage;
-    it scans nothing the training would not materialize anyway), and
-    the SRP auto-shape corpus count (r13: ONE count(*) aggregate that
-    picks the hash width before the plan is built — the same
-    plan-selection class as the tier stats). r14 adds the persisted-
+    it scans nothing the training would not materialize anyway), the
+    SRP auto-shape corpus count (r13: ONE count(*) aggregate that picks
+    the hash width before the plan is built), and the trained
+    codebook's seed-cache count (the kmeans directory's class: it
+    materializes a K ≈ N/64-row cache so its consumers are planned from
+    its measured size, and decides nothing). r14 adds the persisted-
     index probe collect: queries x nprobe bounded rows, collected
     because the probed cell ids must become a STATIC PartitionFilter
     on the on-disk codes layout (a join can't prune directories); r15
@@ -100,12 +98,12 @@ def test_operators_have_no_driver_actions():
             if py.name == "similarity.py" and "limit(MAX_RERANK_QUERIES + 1).count()" in line:
                 prev = stripped
                 continue  # the structural fence (raises, never folds data)
-            if py.name == "similarity.py" and "seeds.agg(_stratum_count(" in stripped:
-                prev = stripped
-                continue  # r10 tier stats: bounded two-int plan selection
             if py.name == "similarity.py" and stripped == "directory.count()":
                 prev = stripped
                 continue  # r13 kmeans directory: K-row cache materialize
+            if py.name == "similarity.py" and stripped == "seeds.count()":
+                prev = stripped
+                continue  # trained codebook: seed-cache materialize
             if py.name == "similarity.py" and "srp_auto_bits(vecs.count()" in stripped:
                 prev = stripped
                 continue  # r13 SRP auto-shape: one count(*) plan selection
@@ -646,6 +644,43 @@ def test_srp_persisted_search_reads_not_rehashes(spark, sf_dir, tmp_path, monkey
     assert any("tbl" in f for f in filters), plan[:800]
     pushed = re.findall(r"DataFilters: \[([^\]]*)", plan)
     assert any("bucket" in f for f in pushed), plan[:800]
+
+
+def test_srp_append_retires_ready_marker(spark, sf_dir, tmp_path, monkeypatch):
+    """An append into a content-keyed SRP index retires its ready
+    marker, like the IVFADC and SQ8 appends: the appended dir is no
+    longer a pure function of the corpus, so ensure_srp_index must
+    rebuild it and the graded q_ann_srp_persisted must never serve
+    appended rows the oracle does not see. The planted rows (exact
+    duplicates of the query vectors) do change a direct-path search,
+    so a served stale index would show in the results."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from mysense_spark.operators import similarity as S
+
+    monkeypatch.setenv("MYSENSE_INDEX_DIR", str(tmp_path / "indexes"))
+    idx = S.ensure_srp_index(spark, sf_dir)
+    assert idx.startswith(str(tmp_path))
+    assert os.path.exists(os.path.join(idx, "_INDEX_READY"))
+
+    vecs = S._vectors(spark, sf_dir)
+    planted = vecs.where(F.col("vec_id") < S._N_QUERIES).withColumn(
+        "vec_id", F.col("vec_id") + 9000
+    )
+    S.write_srp_partitioned(planted, idx, append=True)
+    assert not os.path.exists(os.path.join(idx, "_INDEX_READY"))
+    assert os.path.exists(os.path.join(idx, "_INDEX_APPENDED"))
+    direct = S.ann_srp_search_indexed(spark, vecs.unionByName(planted), idx).collect()
+    top = {r["query_id"]: r["cand_id"] for r in direct if r["rank"] == 1}
+    assert top == {q: q + 9000 for q in range(S._N_QUERIES)}
+
+    assert S.ensure_srp_index(spark, sf_dir) == idx
+    assert os.path.exists(os.path.join(idx, "_INDEX_READY"))
+    assert not os.path.exists(os.path.join(idx, "_INDEX_APPENDED"))
+    persisted = S.q_ann_srp_persisted(spark, sf_dir).collect()
+    assert persisted == S.q_ann_srp(spark, sf_dir).collect() and persisted
 
 
 def test_sq8_persisted_search_reads_not_requantizes(spark, sf_dir, tmp_path, monkeypatch):
