@@ -46,12 +46,6 @@ _DF_CAP_MIN = 25
 _DF_CAP_DEN = 200  # 1/200 = 0.5 % of docs
 
 
-def _df_cap(n_docs: int) -> int:
-    """Eager twin of the lazy in-plan cap expression in
-    q_ngram_jaccard_pairs (kept for tests/documentation)."""
-    return max(_DF_CAP_MIN, (n_docs + _DF_CAP_DEN - 1) // _DF_CAP_DEN)
-
-
 def _h60(c: Column) -> Column:
     """Full 60-bit md5 hash (no modulus) — the join/count-safe form."""
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
@@ -120,10 +114,10 @@ def df_capped(raw: DataFrame, doc: DataFrame) -> DataFrame:
     (doc_id, hsh) table before any self-join. Rows are distinct per doc,
     so count(*) per hsh IS the document frequency; heavy hitters are few
     by construction, so the anti-join build side broadcasts. The cap
-    rides as a 1-row broadcast-crossJoin scalar (the lazy twin of
-    _df_cap) so building this DataFrame never triggers an eager count()
-    action. Shared by the graded query and tools/scaling_sweep.py so the
-    measured join-row counts are measured on THIS code."""
+    rides as a 1-row broadcast-crossJoin scalar so building this
+    DataFrame never triggers an eager count() action. Shared by the
+    graded query and tools/scaling_sweep.py so the measured join-row
+    counts are measured on THIS code."""
     nd = doc.agg(F.count(F.lit(1)).alias("nd"))
     cap_col = F.greatest(
         F.lit(_DF_CAP_MIN).cast("long"),
@@ -143,8 +137,8 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     >= 1 shingle, threshold 0.05. The shingle equi-join bounds the pair
     explosion to co-bucketed docs (never a full cross join); shingles
     ride as 60-bit hashes so the self-join shuffles 8-byte keys; hot
-    shingles (df > _df_cap) are dropped before the self-join so no
-    bucket is ever quadratic in corpus size."""
+    shingles (df above the df_capped cap) are dropped before the
+    self-join so no bucket is ever quadratic in corpus size."""
     doc = load(spark, sf_dir, "documents")
     from .util import ieee_round
 

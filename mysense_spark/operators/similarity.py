@@ -1868,7 +1868,7 @@ def kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plans are constant-size — and it still materializes eagerly, so
     # the concurrent-broadcast race the old count() fenced stays
     # fenced. ContextCleaner frees the RDD when the DataFrame goes out
-    # of scope (the _bpe_chain discipline).
+    # of scope.
     directory = (
         cent2.groupBy("cid")
         .agg(F.array_sort(F.collect_list(F.struct("d", "cq"))).alias("a"))
@@ -3434,7 +3434,6 @@ def _nearest(
     cid: str,
     cvec: str,
     on: str | None = None,
-    bcast: bool = True,
     keep: list[str] | None = None,
 ) -> DataFrame:
     """The argmin-assignment kernel for NON-broadcastable candidate sets
@@ -3448,8 +3447,7 @@ def _nearest(
     never influences the comparison), saving the join-back to re-attach
     them. For codebook tables small enough to broadcast, use
     _nearest_bcast — same distance, same tie-break, zero shuffle."""
-    c = F.broadcast(cands) if bcast else cands
-    joined = rows.crossJoin(c) if on is None else rows.join(c, on)
+    joined = rows.crossJoin(cands) if on is None else rows.join(cands, on)
     keep = keep or []
     payload = [F.col(k) for k in keep]
     return (
@@ -3643,7 +3641,7 @@ def _two_level_parts(
     )
     af = _nearest(
         vca, fine, "vec_id", "qv", "fine_id", "fqv",
-        on="coarse_id", bcast=False, keep=["qv"],
+        on="coarse_id", keep=["qv"],
     )
     f1 = _int_mean(af, "fine_id", "fqv1")
     # refined fine codebook: K rows, consumed by the final re-assignment
@@ -3651,8 +3649,7 @@ def _two_level_parts(
     # of the codebook tables
     f1cell = tracked_persist(f1.join(fine.select("fine_id", "coarse_id"), "fine_id"))
     final = _nearest(
-        vca, f1cell, "vec_id", "qv", "fine_id", "fqv1",
-        on="coarse_id", bcast=False,
+        vca, f1cell, "vec_id", "qv", "fine_id", "fqv1", on="coarse_id"
     ).select("vec_id", F.col("fine_id").alias("cent_id"))
     return vca, f1cell, final
 

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..cache import tracked_persist
 from ..io import load
+from .util import ieee_round
 
 _WORD_RE = "[a-z0-9]+"
 
@@ -57,8 +58,8 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             F.length("text").alias("len_chars"),
             n_tokens.alias("n_tokens"),
-            F.round(alpha_chars / F.nullif(n_tokens, F.lit(0)), 6).alias("avg_word_len"),
-            F.round(alpha_chars / F.nullif(F.length("text"), F.lit(0)), 6).alias("alpha_ratio"),
+            ieee_round(alpha_chars / F.nullif(n_tokens, F.lit(0)), 6).alias("avg_word_len"),
+            ieee_round(alpha_chars / F.nullif(F.length("text"), F.lit(0)), 6).alias("alpha_ratio"),
         )
         .orderBy("doc_id")
     )
@@ -91,7 +92,7 @@ def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("bpe").alias("total_bpe_tokens"),
             F.sum("ws").alias("total_ws_tokens"),
-            F.round(F.sum("bpe") / F.count(F.lit(1)), 6).alias("avg_bpe_tokens"),
+            ieee_round(F.sum("bpe") / F.count(F.lit(1)), 6).alias("avg_bpe_tokens"),
         )
         .orderBy("source")
     )
@@ -167,8 +168,6 @@ ORDER BY lang, predicted
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document quality scoring: length score + alpha ratio + token-count
     score, weighted; plus a decile bucket for corpus filtering."""
-    from .util import ieee_round
-
     doc = load(spark, sf_dir, "documents")
     n_tokens = _ntokens(F.col("text"))
     # nullif: an empty doc would hit ANSI DIVIDE_BY_ZERO; NULL quality
@@ -250,8 +249,6 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     crossJoin (the bm25 broadcast-totals pattern) — fully lazy, no
     driver-side count, so the query composes into larger plans and
     streaming scoring without a hidden eager job."""
-    from .util import ieee_round
-
     doc = load(spark, sf_dir, "documents")
     totals = doc.agg(F.count(F.lit(1)).alias("nd"))
     words = F.explode(F.expr(f"regexp_extract_all(text, '{_WORD_RE}', 0)")).alias("term")
@@ -343,15 +340,15 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.when(is_u, F.col("c"))).alias("top_u"),
         F.max(F.when(~is_u, F.col("c"))).alias("top_b"),
     )
-    top_bigram = F.round(F.col("top_b").cast("double") / (F.col("n_tokens") - 1), 6)
+    top_bigram = ieee_round(F.col("top_b").cast("double") / (F.col("n_tokens") - 1), 6)
     return (
         stat.select(
             "doc_id",
             "n_tokens",
-            F.round(F.col("n_distinct").cast("double") / F.col("n_tokens"), 6).alias(
+            ieee_round(F.col("n_distinct").cast("double") / F.col("n_tokens"), 6).alias(
                 "distinct_ratio"
             ),
-            F.round(F.col("top_u").cast("double") / F.col("n_tokens"), 6).alias(
+            ieee_round(F.col("top_u").cast("double") / F.col("n_tokens"), 6).alias(
                 "top_unigram_frac"
             ),
             top_bigram.alias("top_bigram_frac"),
@@ -499,8 +496,6 @@ def q_dup_ngram_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
     All integer counts; linear in corpus size, no quadratic stage, no
     Python.
     """
-    from .util import ieee_round
-
     doc = load(spark, sf_dir, "documents")
     toks = doc.select(
         "doc_id", F.expr(f"regexp_extract_all(text, '{_WORD_RE}', 0)").alias("w")
@@ -593,8 +588,6 @@ def q_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number is constant within a run); two bounded aggs finish.
     Linear in corpus size, no quadratic stage, no Python.
     """
-    from .util import ieee_round
-
     doc = load(spark, sf_dir, "documents")
     # persisted (r15 optimization pass): the positional-gram stream AND
     # the per-doc total below both consume the tokenized corpus —
@@ -902,8 +895,8 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
             # nullif: a stratum of all-empty docs sums to 0 tokens and
             # ANSI-mode 0/0 throws where the oracle yields NULL (same
             # guard class as text_stats/quality_score/gopher_filter)
-            F.round(F.sum("bpe") / F.nullif(F.sum("ws"), F.lit(0)), 6).alias("fertility"),
-            F.round(F.sum("alpha") / F.nullif(F.sum("bpe"), F.lit(0)), 6).alias("chars_per_token"),
+            ieee_round(F.sum("bpe") / F.nullif(F.sum("ws"), F.lit(0)), 6).alias("fertility"),
+            ieee_round(F.sum("alpha") / F.nullif(F.sum("bpe"), F.lit(0)), 6).alias("chars_per_token"),
         )
         .orderBy("lang")
     )
@@ -968,10 +961,10 @@ def q_vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vocab_size",
             "total_tokens",
             "hapax_types",
-            F.round(F.col("hapax_types").cast("double") / F.col("vocab_size"), 6).alias(
+            ieee_round(F.col("hapax_types").cast("double") / F.col("vocab_size"), 6).alias(
                 "hapax_frac"
             ),
-            F.round(F.col("top10_tokens").cast("double") / F.col("total_tokens"), 6).alias(
+            ieee_round(F.col("top10_tokens").cast("double") / F.col("total_tokens"), 6).alias(
                 "top10_share"
             ),
         )
@@ -1190,8 +1183,6 @@ def q_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     one linear scan, no shuffle beyond the presentation sort; every
     ratio is floor-form rounded to 6 dp BEFORE its threshold compare so
     rule membership is bit-identical across engines."""
-    from .util import ieee_round
-
     doc = load(spark, sf_dir, "documents")
     lines = F.split(F.col("text"), "\n")
     # Two regex passes total over the text (a 100 TB corpus is scanned,
@@ -1448,8 +1439,6 @@ def winnow(doc: DataFrame) -> DataFrame:
     the test."""
     from pyspark.sql import Window
 
-    from .util import ieee_round
-
     min_words = _WIN_K + _WIN_W - 1
     toks = doc.select(
         "doc_id", F.expr(f"regexp_extract_all(text, '{_WORD_RE}', 0)").alias("w")
@@ -1583,7 +1572,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     through exact_sum (order-independent quantized accumulation) with
     the log-ratio pre-rounded to a 1e-9 grid, so the result is
     bit-identical on any partitioning and to the DuckDB oracle."""
-    from .util import exact_sum, ieee_round
+    from .util import exact_sum
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     words = F.expr(f"regexp_extract_all(text, '{_WORD_RE}', 0)")
@@ -1717,8 +1706,6 @@ def q_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         10,
     ).cast("long")
     u = (u32 * 2 + 1).cast("double") / F.lit(8589934592.0)
-    from .util import ieee_round
-
     key = ieee_round(F.col("log_weight") + -F.log(-F.log(u)), 6)
     keyed = w.select("doc_id", "n_bigrams", "log_weight", key.alias("sample_key"))
     top = keyed.orderBy(F.desc("sample_key"), F.asc("doc_id")).limit(_DSIR_K)
@@ -1759,7 +1746,8 @@ SQL_DSIR_RESAMPLE = _sql_dsir_resample()
 
 # --- BPE merge training (r13) -----------------------------------------------
 
-_BPE_MERGES = 8  # unrolled merge iterations (the Lloyd-chain idiom)
+_BPE_MERGES = 8  # graded merge rounds
+_BPE_SCALED_MERGES = 64  # graded rounds of bpe_train_scaled
 _BPE_VOCAB_CAP = 512  # train on the top-V word types (published practice)
 _BPE_MAX_WORD = 48  # longer "words" are corpus junk, not vocabulary
 # Symbol-space pin: BPE words are restricted to printable non-space
@@ -1773,12 +1761,13 @@ _BPE_ASCII_SPARK = "^[\\x21-\\x7e]+$"
 _BPE_ASCII_SQL = r"^[\x21-\x7e]+$"
 
 
-def bpe_train(doc: DataFrame) -> DataFrame:
+def bpe_train(doc: DataFrame, n_merges: int = _BPE_MERGES) -> DataFrame:
     """Byte-pair-encoding MERGE TRAINING (Sennrich, Haddow & Birch, ACL
-    2016 §3.2) — the vocabulary-induction step of a tokenizer pipeline,
-    distributed: learn the top-_BPE_MERGES merge operations over the
-    corpus, returning one row per merge (step, lhs, rhs, pair_count,
-    merged).
+    2016 §3.2) — the vocabulary-induction step of a tokenizer pipeline:
+    learn the top-n_merges merge operations over the corpus, returning
+    one row per merge (step, lhs, rhs, pair_count, merged), ordered by
+    step. A corpus that runs out of mergeable pairs early yields the
+    short table.
 
     Algorithm, exactly the paper's: words become symbol sequences of
     their characters plus an end-of-word marker '</w>'; each iteration
@@ -1790,52 +1779,29 @@ def bpe_train(doc: DataFrame) -> DataFrame:
 
     Exactness design: a symbol sequence is ONE string with every symbol
     wrapped in single spaces (' a  b  c ') — so 'apply merge (a, b)' is
-    a literal string replace of ' a  b ' with ' ab ', and both engines'
-    replace() functions share the non-overlapping left-to-right scan
-    that IS the greedy BPE merge order (verified: ' a  a  a  a ' ->
-    ' aa  aa '). Pair counting splits on the double-space gap. All
-    counts are int64; no floats anywhere.
+    a literal string replace of ' a  b ' with ' ab ', and both Python's
+    str.replace and DuckDB's replace() share the non-overlapping
+    left-to-right scan that IS the greedy BPE merge order (verified:
+    ' a  a  a  a ' -> ' aa  aa '). Pair counting splits on the
+    double-space gap. All counts are integers; no floats anywhere.
 
-    Scale shape: ONE corpus scan builds the word-frequency table; the
-    training loop then runs on the top-_BPE_VOCAB_CAP word TYPES
-    (bounded by vocabulary, not corpus size — how every production BPE
-    trainer works: at 100 TB the word-count agg is the only stage that
-    sees the data; map-side combine makes it one shuffle of distinct
-    words). Each iteration is a bounded-table explode/agg plus a 1-row
-    broadcast; per-iteration localCheckpoint (the neardup_clusters
-    idiom) keeps the 8-deep plan from nesting exponentially."""
-    _w, merges = _bpe_chain(doc)
-    out = merges[0]
-    for m in merges[1:]:
-        out = out.unionByName(m)
-    return out.select(
-        "step", "lhs", "rhs", "pair_count", F.concat("lhs", "rhs").alias("merged")
+    Scale shape: the word-count table (_bpe_vocab) is the only stage
+    that sees the corpus — one scan, map-side combine, capped at
+    _BPE_VOCAB_CAP word types (how every production BPE trainer works).
+    The merge loop then runs in the driver over those <= _BPE_VOCAB_CAP
+    collected rows (_bpe_train_rows), O(n_merges x vocab) CPU with no
+    job per round: merge rounds are sequential, and a Spark job per
+    round cost 0.20-0.26 s per merge (SCALING.md r14)."""
+    _syms, merges = _bpe_train_rows(doc, n_merges)
+    return doc.sparkSession.createDataFrame(
+        merges, schema="step int, lhs string, rhs string, pair_count long, merged string"
     ).orderBy("step")
 
 
-def _bpe_chain(
-    doc: DataFrame, n_merges: int = _BPE_MERGES
-) -> tuple[DataFrame, list[DataFrame]]:
-    """The shared BPE training lineage (see bpe_train): returns the
-    final symbol table (word, cnt, seq) — consumed by bpe_encode as the
-    learned tokenizer — and the per-step 1-row merge tables.
-
-    MERGE-COUNT BOUNDARY (r14, measured by a one-off merge sweep,
-    table in SCALING.md): merge rounds are inherently SEQUENTIAL (each
-    merge depends on the counts after the previous one — Sennrich 2016;
-    no production trainer parallelizes across merges), so the loop is
-    n_merges driver-scheduled barrier groups over the <= _BPE_VOCAB_CAP
-    symbol table. The corpus-side cost stays ONE scan regardless of
-    n_merges; past the graded 8 rounds the wall is driver-loop
-    dominated at a measured ~0.2-0.3 s/merge on local[32] (flat 8 ->
-    64 -> 256), so a real 32k-merge vocabulary is ~2-3 h of driver
-    scheduling — the known single-machine-trainer regime. At that
-    scale the right split is: this operator computes the WORD-COUNT
-    table distributed (the only stage that sees the corpus), a
-    single-process trainer (heap-based pair counts over <= vocab-cap
-    word types) learns the 32k merges from it, and bpe_encode /
-    bpe_tokenize apply them distributed — training cost O(vocab),
-    corpus cost unchanged."""
+def _bpe_vocab(doc: DataFrame) -> DataFrame:
+    """The BPE training input (see bpe_train): the word-count table over
+    the corpus, capped to the top-_BPE_VOCAB_CAP word types, with each
+    word's initial spaced symbol sequence — (word, cnt, seq)."""
     wc = (
         doc.select(F.explode(F.split("text", " ")).alias("word"))
         .where(
@@ -1846,113 +1812,28 @@ def _bpe_chain(
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     vocab = wc.orderBy(F.desc("cnt"), "word").limit(_BPE_VOCAB_CAP)
-    w = vocab.select(
+    return vocab.select(
         "word",
         "cnt",
         F.concat(
             F.regexp_replace("word", "(.)", " $1 "), F.lit(" </w> ")
         ).alias("seq"),
-    ).localCheckpoint(eager=True)
-    merges = []
-    for k in range(n_merges):
-        toks = F.split(F.trim(F.col("seq")), "  ")
-        prs = F.zip_with(
-            F.slice(toks, 1, F.size(toks) - 1),
-            F.slice(toks, 2, F.size(toks) - 1),
-            lambda a, b: F.struct(a.alias("lhs"), b.alias("rhs")),
-        )
-        pairs = (
-            w.select("cnt", F.explode(prs).alias("p"))
-            .groupBy(F.col("p.lhs").alias("lhs"), F.col("p.rhs").alias("rhs"))
-            .agg(F.sum("cnt").alias("pair_count"))
-        )
-        top = (
-            pairs.orderBy(F.desc("pair_count"), "lhs", "rhs")
-            .limit(1)
-            .select(F.lit(k + 1).alias("step"), "lhs", "rhs", "pair_count")
-            .localCheckpoint(eager=True)
-        )
-        merges.append(top)
-        bc = F.broadcast(
-            top.select(F.col("lhs").alias("_a"), F.col("rhs").alias("_b"))
-        )
-        needle = F.concat(F.lit(" "), F.col("_a"), F.lit("  "), F.col("_b"), F.lit(" "))
-        repl = F.concat(F.lit(" "), F.col("_a"), F.col("_b"), F.lit(" "))
-        # LEFT join on true, not a cross join: when the corpus runs out
-        # of mergeable pairs before the last round, the argmax table is
-        # EMPTY — a cross join would annihilate the symbol table and
-        # bpe_encode would silently fall back to char counts for every
-        # word (degenerate-corpus pin caught exactly that); an
-        # exhausted round must be a NO-OP instead
-        w = (
-            w.join(bc, F.lit(True), "left")
-            .select(
-                "word",
-                "cnt",
-                F.when(F.col("_a").isNull(), F.col("seq"))
-                .otherwise(F.replace(F.col("seq"), needle, repl))
-                .alias("seq"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return w, merges
-
-
-_BPE_SCALED_MERGES = 64  # graded rounds for the single-process trainer
-
-
-def bpe_train_driver(
-    spark: SparkSession, doc: DataFrame, n_merges: int
-) -> DataFrame:
-    """The SINGLE-PROCESS BPE trainer for real vocabulary sizes (r15,
-    VERDICT #5) — the split the measured merge-round boundary names
-    (SCALING.md: the distributed trainer's per-merge cost is a flat
-    ~0.2-0.3 s of driver-side barrier scheduling, so a 32k-merge
-    vocabulary is hours of scheduling overhead over a <= 512-row
-    table). The production decomposition, exactly how every real BPE
-    trainer works at corpus scale:
-
-      1. DISTRIBUTED word counts — _bpe_chain(n_merges=0): the only
-         stage that sees the corpus (one scan, map-side combine, the
-         capped vocabulary with initial symbol sequences);
-      2. IN-DRIVER merge loop — pure Python over the <= _BPE_VOCAB_CAP
-         collected word types, matching _bpe_chain's arithmetic
-         bit-for-bit: pairs split on the double-space gap, argmax
-         tie-broken (count DESC, lhs ASC, rhs ASC — pure-ASCII symbol
-         space, so Python/Java/DuckDB orderings coincide), merge
-         applied as the same left-to-right non-overlapping
-         str.replace both engines' replace() implements. An exhausted
-         round (no pairs left) stops the loop — the distributed
-         chain's empty-argmax no-op, expressed as termination;
-      3. DISTRIBUTED apply — the merge table drives bpe_encode /
-         bpe_tokenize unchanged (broadcast vocab join; corpus cost
-         independent of n_merges).
-
-    Training cost is O(n_merges x vocab) driver CPU with ZERO job
-    scheduling per round (measured: ~1000x faster per merge than the
-    distributed loop at 64/256 rounds — table in SCALING.md); the
-    corpus-side cost is unchanged. Parity with bpe_train is
-    pytest-pinned at 8 and 64 merges; prefix-stability (a 256-merge
-    run's first 64 merges equal the 64-merge run's) pins the scaled
-    regime. Reference semantics: Sennrich, Haddow & Birch, ACL 2016
-    §3.2, as cited in bpe_train."""
-    _syms, merges = _bpe_train_rows(doc, n_merges)
-    return spark.createDataFrame(
-        merges, schema="step int, lhs string, rhs string, pair_count long, merged string"
-    ).orderBy("step")
+    )
 
 
 def _bpe_train_rows(
     doc: DataFrame, n_merges: int
 ) -> tuple[list[tuple[str, int, str]], list[tuple[int, str, str, int, str]]]:
-    """The trainer-split kernel shared by bpe_train_driver and
-    _bpe_symbols: distributed word counts (_bpe_chain at zero merges —
-    the only stage that sees the corpus), then the in-driver merge loop
-    over the <= _BPE_VOCAB_CAP collected word types, matching
-    _bpe_chain's arithmetic bit-for-bit (see bpe_train_driver). Returns
-    (final (word, cnt, seq) symbol rows, (step, lhs, rhs, pair_count,
-    merged) merge rows)."""
-    vocab_rows = _bpe_chain(doc, n_merges=0)[0].collect()
+    """The BPE trainer shared by bpe_train and _bpe_symbols: collect the
+    <= _BPE_VOCAB_CAP-row _bpe_vocab table, then run the merge loop in
+    the driver. Pairs split on the double-space gap, the argmax
+    tie-breaks (count DESC, lhs ASC, rhs ASC) — a pure-ASCII symbol
+    space, so Python and DuckDB orderings coincide — and a merge is the
+    same left-to-right non-overlapping replace the oracle applies. A
+    round with no pairs left stops the loop. Returns (final (word, cnt,
+    seq) symbol rows, (step, lhs, rhs, pair_count, merged) merge
+    rows)."""
+    vocab_rows = _bpe_vocab(doc).collect()
     seqs: list[tuple[str, int, str]] = [
         (r["word"], int(r["cnt"]), r["seq"]) for r in vocab_rows
     ]
@@ -1974,34 +1855,27 @@ def _bpe_train_rows(
     return seqs, merges
 
 
-def _bpe_symbols(doc: DataFrame, n_merges: int = _BPE_MERGES) -> DataFrame:
+def _bpe_symbols(doc: DataFrame) -> DataFrame:
     """The trained symbol table (word, cnt, seq) for the APPLY-side
-    operators (bpe_encode / bpe_tokenize and their packing consumers) —
-    computed through the single-process trainer split instead of the
-    n_merges distributed barrier rounds of _bpe_chain (r15 optimization
-    pass, guide §1.2 step 1: the merge loop over the <= _BPE_VOCAB_CAP
-    word types was costing ~0.2-0.3 s of driver job scheduling PER MERGE
-    in every consumer query while touching no corpus data after the
-    word-count scan; the driver loop is bit-for-bit the same arithmetic
-    — pinned by test_bpe_symbols_match_distributed_chain — at ~0.05 ms
-    per merge). Returned as a VALUES literal (values_df): a pure
-    LocalRelation the consumers' broadcast joins fold directly, no jobs.
-    bpe_train itself keeps the distributed loop — IT is the graded
-    distributed trainer; this helper only changes how the apply side
-    obtains the (identical) trained state."""
+    operators (bpe_encode / bpe_tokenize and their packing consumers):
+    the final symbol rows of the same trainer bpe_train runs
+    (_bpe_train_rows), matching the oracle's w{_BPE_MERGES} CTE — pinned
+    by test_bpe_symbols_match_distributed_chain. Returned as a VALUES
+    literal (values_df): a pure LocalRelation the consumers' broadcast
+    joins fold directly, no jobs."""
     from ..io import values_df
 
-    syms, _merges = _bpe_train_rows(doc, n_merges)
+    syms, _merges = _bpe_train_rows(doc, _BPE_MERGES)
     return values_df(
         doc.sparkSession, syms, "word string, cnt bigint, seq string"
     )
 
 
 def q_bpe_train_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Graded entry: 64 BPE merges through the single-process trainer
-    (distributed word counts -> in-driver merge loop -> the merge
-    table). The DuckDB oracle is the SAME unrolled count/argmax/replace
-    chain as bpe_train at 64 rounds (AS MATERIALIZED — each w{k} is
+    """Graded entry: 64 BPE merges through bpe_train (distributed word
+    counts -> in-driver merge loop -> the merge table). The DuckDB
+    oracle is the SAME unrolled count/argmax/replace chain as the
+    bpe_train oracle at 64 rounds (AS MATERIALIZED — each w{k} is
     referenced twice and a 64-deep chain must not lean on the engine's
     reuse heuristic), so the gate hashes a 64-row learned merge table
     computed by two completely different trainer architectures.
@@ -2013,7 +1887,7 @@ def q_bpe_train_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-round gate already proves; the 256-round regime is covered by
     the prefix-stability and determinism pytest pins plus the
     SCALING.md timing table instead."""
-    return bpe_train_driver(spark, load(spark, sf_dir, "documents"), _BPE_SCALED_MERGES)
+    return bpe_train(load(spark, sf_dir, "documents"), _BPE_SCALED_MERGES)
 
 
 def bpe_encode(doc: DataFrame) -> DataFrame:
@@ -2031,8 +1905,7 @@ def bpe_encode(doc: DataFrame) -> DataFrame:
     left join from word to its trained token count (out-of-vocabulary
     words fall back to the character baseline — the standard cap
     semantics), and a per-doc partial agg. The symbol table comes from
-    the single-process trainer split (_bpe_symbols — identical rows,
-    none of the distributed loop's per-merge scheduling)."""
+    bpe_train's trainer (_bpe_symbols)."""
     w = _bpe_symbols(doc)
     ntok = w.select("word", F.size(F.split(F.trim("seq"), "  ")).alias("n_tok"))
     dw = doc.select("doc_id", F.explode(F.split("text", " ")).alias("w")).where(
@@ -2061,10 +1934,11 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graded entry: the first 8 BPE merges learned from the documents
-    corpus. The DuckDB oracle mirrors the WHOLE training — word counts,
-    the capped vocabulary, the spaced-symbol-string representation, 8
-    unrolled count/argmax/replace rounds (the kmeans-chain idiom) —
-    so the gate hashes the learned merge TABLE, not a summary."""
+    corpus by bpe_train's driver merge loop. The DuckDB oracle mirrors
+    the WHOLE training — word counts, the capped vocabulary, the
+    spaced-symbol-string representation, 8 unrolled
+    count/argmax/replace rounds (the kmeans-chain idiom) — so the gate
+    hashes the learned merge TABLE, not a summary."""
     return bpe_train(load(spark, sf_dir, "documents"))
 
 
@@ -2092,8 +1966,7 @@ def bpe_tokenize(doc: DataFrame, ordered: bool = True) -> DataFrame:
     back to the character baseline — the standard cap semantics), and
     one per-doc sort-collect. The token strings stay JVM-side end to
     end (split/trim/array_join — no Python). The symbol table comes
-    from the single-process trainer split (_bpe_symbols — identical
-    rows, none of the distributed loop's per-merge scheduling)."""
+    from bpe_train's trainer (_bpe_symbols)."""
     w = _bpe_symbols(doc)
     toks = F.split(F.trim("seq"), "  ")
     wtok = w.select(
@@ -2143,9 +2016,9 @@ def q_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_bpe_ctes(n_merges: int = _BPE_MERGES, materialized: bool = False) -> str:
     """The BPE training lineage as SQL CTEs — ONE definition shared by
-    the bpe_train and bpe_encode oracles (mirrors _bpe_chain: word
-    counts, capped vocab, n_merges unrolled count/argmax/replace
-    rounds). Emits wc, vocab, w0..w{K}, p1..p{K}, m1..m{K}.
+    the bpe_train and bpe_encode oracles (mirrors _bpe_vocab and the
+    _bpe_train_rows merge loop: word counts, capped vocab, n_merges
+    unrolled count/argmax/replace rounds). Emits wc, vocab, w0..w{K}, p1..p{K}, m1..m{K}.
 
     `materialized=True` stamps AS MATERIALIZED on every CTE — required
     past ~a few dozen rounds (the bpe_train_scaled oracle at 64): each

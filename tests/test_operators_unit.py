@@ -432,12 +432,22 @@ def test_ngram_jaccard_df_cap(spark, tmp_path):
     import pandas as pd
 
     from mysense_spark.io import TABLES
-    from mysense_spark.operators.dedup import _DF_CAP_MIN, _df_cap
+    from mysense_spark.operators.dedup import df_capped
     from mysense_spark.oracle import check_query
     from mysense_spark.queries import registry
 
-    assert _df_cap(500) == _DF_CAP_MIN
-    assert _df_cap(100_000) == 500
+    def survivors(n_docs, dfs):
+        # hash h occurs in the first dfs[h] of n_docs documents
+        doc = spark.range(n_docs).withColumnRenamed("id", "doc_id")
+        raw = spark.createDataFrame(
+            [(d, h) for h, n in enumerate(dfs) for d in range(n)], "doc_id long, hsh long"
+        )
+        return {r["hsh"] for r in df_capped(raw, doc).select("hsh").distinct().collect()}
+
+    # 500 docs: the floor cap _DF_CAP_MIN = 25 applies
+    assert survivors(500, [25, 26]) == {0}
+    # 10,000 docs: ceil(0.5% of docs) = 50 is above the floor
+    assert survivors(10_000, [50, 51]) == {0}
 
     # corpus: 30 docs (> cap of 25) that share EXACTLY one shingle
     # ("zzz yyy xxx") and are otherwise unique, sized so that one shared
@@ -713,6 +723,38 @@ def test_empty_doc_parity(spark, tmp_path):
     for name in ("gopher_filter", "quality_score", "text_stats", "repetition_stats"):
         res = check_query(spark, name, str(sf))
         assert res.ok, f"{name}: {res.detail}"
+
+
+def test_text_ratio_rounding_matches_oracle_on_half_grid(spark, tmp_path):
+    """41/640 = 0.0640625 sits on the 6-decimal half grid. Spark's native
+    round(double, 6) rounds its shortest decimal string half-up to
+    0.064063, while the DuckDB oracle rounds the binary double to
+    0.064062; util.ieee_round agrees with the oracle. A one-document
+    corpus of 640 tokens over 41 distinct words (one word x600 plus 40
+    singletons) puts repetition_stats' distinct_ratio exactly there."""
+    import os
+
+    import pandas as pd
+
+    from mysense_spark.io import TABLES
+    from mysense_spark.oracle import check_query
+    from mysense_spark.queries import registry
+    from tests.conftest import SF_SMOKE
+
+    sf = tmp_path / "halfsf"
+    sf.mkdir()
+    for t in TABLES:
+        if t != "documents":
+            os.symlink(f"{SF_SMOKE}/{t}.parquet", sf / f"{t}.parquet")
+    text = " ".join(["aa"] * 600 + [f"s{i}" for i in range(40)])
+    pd.DataFrame(
+        [{"doc_id": 0, "text": text, "lang": "en", "source": "s", "n_chars": len(text)}]
+    ).to_parquet(sf / "documents.parquet")
+
+    res = check_query(spark, "repetition_stats", str(sf))
+    assert res.ok, res.detail
+    (got,) = registry()["repetition_stats"][0](spark, str(sf)).collect()
+    assert (got["n_tokens"], got["distinct_ratio"]) == (640, 0.064062)
 
 
 def test_hourly_pivot_rh_is_not_fabricated(spark, tmp_path):
@@ -4528,72 +4570,62 @@ def test_packed_shards_materializes_manifest_exactly(spark, sf_dir, tmp_path):
 
 
 def test_bpe_driver_trainer_matches_distributed(spark, sf_dir):
-    """The single-process trainer split (r15): bpe_train_driver's
-    merge table must match the distributed _bpe_chain trainer
-    BIT-FOR-BIT at 8 and 64 merges on the real corpus — the parity pin
-    that makes the distributed-counts -> driver-merge-loop ->
-    distributed-apply decomposition safe to deploy at 32k merges. Also
-    pins determinism (two runs identical) and prefix stability (a
-    longer run's first K merges equal the K-merge run — the property
-    that lets the 64-round gate stand in for the 256-round regime)."""
+    """bpe_train's driver merge loop must match the DuckDB oracle's
+    unrolled count/argmax/replace chain at 8 and 64 merges on the real
+    corpus — the parity pin that makes the distributed-counts ->
+    driver-merge-loop -> distributed-apply decomposition safe to deploy
+    at 32k merges. Also pins determinism (two runs identical) and prefix
+    stability (a longer run's first K merges equal the K-merge run — the
+    property that lets the 64-round gate stand in for the 256-round
+    regime)."""
     from mysense_spark.io import load
-    from mysense_spark.operators.text import bpe_train, bpe_train_driver, _bpe_chain
+    from mysense_spark.operators.text import _sql_bpe_train, bpe_train
+    from mysense_spark.oracle import compare_frames, run_oracle
 
     doc = load(spark, sf_dir, "documents")
-    dist8 = [tuple(r) for r in bpe_train(doc).collect()]
-    drv8 = [tuple(r) for r in bpe_train_driver(spark, doc, 8).collect()]
-    assert drv8 == dist8
+    for n, sql in ((8, _sql_bpe_train(8)), (64, _sql_bpe_train(64, materialized=True))):
+        res = compare_frames(bpe_train(doc, n).toPandas(), run_oracle(sql, sf_dir))
+        assert res.ok, (n, res)
 
-    _w, m64 = _bpe_chain(doc, n_merges=64)
-    dist64 = []
-    for step, m in enumerate(m64, start=1):
-        rows = m.collect()
-        if not rows:
-            continue
-        (r,) = rows
-        dist64.append((r["step"], r["lhs"], r["rhs"], r["pair_count"], r["lhs"] + r["rhs"]))
-    drv64 = [tuple(r) for r in bpe_train_driver(spark, doc, 64).collect()]
-    assert drv64 == dist64
-
-    assert [tuple(r) for r in bpe_train_driver(spark, doc, 64).collect()] == drv64
-    drv256 = [tuple(r) for r in bpe_train_driver(spark, doc, 256).collect()]
+    drv64 = [tuple(r) for r in bpe_train(doc, 64).collect()]
+    assert [tuple(r) for r in bpe_train(doc, 64).collect()] == drv64
+    drv256 = [tuple(r) for r in bpe_train(doc, 256).collect()]
     assert drv256[:64] == drv64, "merge sequence is not prefix-stable"
 
 
 def test_bpe_symbols_match_distributed_chain(spark, sf_dir):
-    """_bpe_symbols (r15 optimization: the apply-side operators'
-    trained symbol table, computed through the driver merge loop and
-    returned as a VALUES literal) must match the distributed
-    _bpe_chain's final symbol table ROW-FOR-ROW on the real corpus at
-    the graded 8 merges — the pin that makes swapping bpe_encode /
-    bpe_tokenize onto the trainer split a pure plan change. Compared
-    as sorted (word, cnt, seq) sets (the chain's table order is
-    partitioning-dependent; consumers only ever join on word)."""
+    """_bpe_symbols (the apply-side operators' trained symbol table,
+    computed through the driver merge loop and returned as a VALUES
+    literal) must match the DuckDB oracle chain's final symbol table
+    w8 ROW-FOR-ROW on the real corpus at the graded 8 merges — the pin
+    that bpe_encode / bpe_tokenize apply exactly the trained state their
+    oracles apply. Compared as sorted (word, cnt, seq) sets (consumers
+    only ever join on word)."""
     from mysense_spark.io import load
-    from mysense_spark.operators.text import _bpe_chain, _bpe_symbols
+    from mysense_spark.operators.text import _bpe_symbols, _sql_bpe_ctes
+    from mysense_spark.oracle import run_oracle
 
     doc = load(spark, sf_dir, "documents")
-    dist = sorted(tuple(r) for r in _bpe_chain(doc)[0].collect())
-    drv = sorted(tuple(r) for r in _bpe_symbols(doc).collect())
-    assert drv == dist
+    ref = run_oracle(f"WITH {_sql_bpe_ctes()} SELECT word, cnt, seq FROM w8", sf_dir)
+    want = sorted((w, int(c), q) for w, c, q in ref.itertuples(index=False))
+    got = sorted(tuple(r) for r in _bpe_symbols(doc).collect())
+    assert got == want
 
 
 def test_bpe_driver_trainer_stops_on_exhaustion(spark):
     """A degenerate corpus (one two-char word type) runs out of
     mergeable pairs after two merges: ' a  b  </w> ' -> ' ab  </w> '
-    -> ' ab</w> '. The driver trainer must STOP there — the
-    termination twin of the distributed chain's empty-argmax no-op
-    rounds — and emit exactly the merges that happened."""
-    from mysense_spark.operators.text import bpe_train, bpe_train_driver
+    -> ' ab</w> '. The trainer must STOP there and emit exactly the
+    merges that happened (the oracle side of exhaustion is
+    test_bpe_merge_exhaustion_cross_engine)."""
+    from mysense_spark.operators.text import bpe_train
 
     doc = spark.createDataFrame(
         [(i, "ab") for i in range(5)], "doc_id long, text string"
     )
-    drv = [tuple(r) for r in bpe_train_driver(spark, doc, 8).collect()]
+    drv = [tuple(r) for r in bpe_train(doc, 8).collect()]
     assert len(drv) == 2
     assert [(r[1], r[2]) for r in drv] == [("a", "b"), ("ab", "</w>")]
-    dist = [tuple(r) for r in bpe_train(doc).collect()]
-    assert drv == dist
 
 
 def test_mp4_sample_tables_edge_shapes():

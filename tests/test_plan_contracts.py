@@ -66,26 +66,26 @@ def test_operators_have_no_driver_actions():
     """Every registered query must be a LAZY plan: no .count()/.collect()
     /.toPandas() driver actions inside operators/ — an eager scalar makes
     the query non-composable (it fires a job at plan-build time) and
-    hides a second corpus scan from the plan reader. Five audited
-    exemptions remain: the similarity rerank fence (a bounded
-    limit(K+1).count() guard that RAISES on oversized query sets), the
-    neardup label-propagation convergence probe (limit(1)-bounded), the
-    kmeans directory materialization (r13: a K-row count over the
-    tracked_persist'd trained cell directory — the search compositions'
-    first touches are several CONCURRENT broadcast-build jobs, and an
-    unmaterialized cache lets each race through the full Lloyd lineage;
-    it scans nothing the training would not materialize anyway), the
-    SRP auto-shape corpus count (r13: ONE count(*) aggregate that picks
-    the hash width before the plan is built), and the trained
-    codebook's seed-cache count (the kmeans directory's class: it
-    materializes a K ≈ N/64-row cache so its consumers are planned from
-    its measured size, and decides nothing). r14 adds the persisted-
-    index probe collect: queries x nprobe bounded rows, collected
-    because the probed cell ids must become a STATIC PartitionFilter
-    on the on-disk codes layout (a join can't prune directories); r15
-    adds the SQ8 quantizer-params collect: exactly 64 (min, span) rows
-    that must become plan LITERALS so the code scan is one projection
-    with no join at all (the ship-the-tiny-trained-state class)."""
+    hides a second corpus scan from the plan reader. Seven audited
+    exemptions remain:
+    - the similarity rerank fence: a bounded limit(K+1).count() guard
+      that RAISES on oversized query sets;
+    - the trained codebook's seed-cache count: it materializes a
+      K ≈ N/64-row cache so its consumers are planned from its measured
+      size, and decides nothing;
+    - the SRP auto-shape corpus count (r13): ONE count(*) aggregate that
+      picks the hash width before the plan is built;
+    - the persisted-index probe collect (r14): queries x nprobe bounded
+      rows, collected because the probed cell ids must become a STATIC
+      PartitionFilter on the on-disk codes layout (a join can't prune
+      directories);
+    - the SQ8 quantizer-params collect (r15): exactly 64 (min, span)
+      rows that must become plan LITERALS so the code scan is one
+      projection with no join at all (the ship-the-tiny-trained-state
+      class);
+    - the BPE vocabulary collect: <= _BPE_VOCAB_CAP word-type rows that
+      the driver merge loop trains on;
+    - the neardup label-propagation convergence probe (limit(1)-bounded)."""
     import pathlib
 
     op_dir = pathlib.Path(__file__).resolve().parents[1] / "mysense_spark" / "operators"
@@ -98,9 +98,6 @@ def test_operators_have_no_driver_actions():
             if py.name == "similarity.py" and "limit(MAX_RERANK_QUERIES + 1).count()" in line:
                 prev = stripped
                 continue  # the structural fence (raises, never folds data)
-            if py.name == "similarity.py" and stripped == "directory.count()":
-                prev = stripped
-                continue  # r13 kmeans directory: K-row cache materialize
             if py.name == "similarity.py" and stripped == "seeds.count()":
                 prev = stripped
                 continue  # trained codebook: seed-cache materialize
@@ -115,7 +112,7 @@ def test_operators_have_no_driver_actions():
             if py.name == "similarity.py" and 'sq8_params(vecs).orderBy("d").collect()' in stripped:
                 prev = stripped
                 continue  # r15 SQ8: 64-row quantizer params -> plan literals
-            if py.name == "text.py" and "_bpe_chain(doc, n_merges=0)[0].collect()" in stripped:
+            if py.name == "text.py" and "_bpe_vocab(doc).collect()" in stripped:
                 prev = stripped
                 continue  # r15 single-process trainer: the <= _BPE_VOCAB_CAP
                 # word-type collect IS the architecture (distributed
